@@ -256,30 +256,32 @@ def featurize_docs(d: DataFrame) -> DataFrame:
 # work), and EVERY composition's working-set rebuild — bench-isolated
 # runs rebuild per query — paid it again. Columns are immutable
 # unresolved expression trees, so one instance serves any number of
-# plans; the cache keys on the py4j gateway so a new JVM (new gateway)
-# can never be served another JVM's object handles.
-_FEAT_COL_CACHE: dict = {}
+# plans; the cache holds the py4j gateway it was built for and is reused
+# only for that same object (identity, not id(): a recycled id could
+# otherwise serve a dead JVM's object handles to a new one). At most one
+# live gateway per process, so one slot suffices.
+_FEAT_COL_CACHE: tuple | None = None  # (gateway, cols)
 
 
 def _feat_cols(d: DataFrame):
     from .llm_queries import band_bucket_array, minhash_sig_array
     from ..functions.text import portable_hash64, shingles_from_tokens
 
-    key = id(d.sparkSession._sc._gateway)
-    cols = _FEAT_COL_CACHE.get(key)
-    if cols is None:
-        n_tokens, n_distinct, max_bg = repetition_stat_cols(F.col("__tk"))
-        cols = (
-            tokens(F.col("text")).alias("__tk"),
-            n_tokens.alias("n"),
-            F.transform(
-                shingles_from_tokens(F.col("__tk"), SHINGLE_N), portable_hash64
-            ).alias("sh_arr"),
-            repetitive_col(n_tokens, n_distinct, max_bg).alias("repetitive"),
-            band_bucket_array(minhash_sig_array(F.col("sh_arr"))),
-        )
-        _FEAT_COL_CACHE.clear()  # at most one live gateway per process
-        _FEAT_COL_CACHE[key] = cols
+    global _FEAT_COL_CACHE
+    gateway = d.sparkSession._sc._gateway
+    if _FEAT_COL_CACHE is not None and _FEAT_COL_CACHE[0] is gateway:
+        return _FEAT_COL_CACHE[1]
+    n_tokens, n_distinct, max_bg = repetition_stat_cols(F.col("__tk"))
+    cols = (
+        tokens(F.col("text")).alias("__tk"),
+        n_tokens.alias("n"),
+        F.transform(
+            shingles_from_tokens(F.col("__tk"), SHINGLE_N), portable_hash64
+        ).alias("sh_arr"),
+        repetitive_col(n_tokens, n_distinct, max_bg).alias("repetitive"),
+        band_bucket_array(minhash_sig_array(F.col("sh_arr"))),
+    )
+    _FEAT_COL_CACHE = (gateway, cols)
     return cols
 
 

@@ -106,9 +106,10 @@ class PseDatasets:
             return connector.get_stock_data(symbol, start, end)
 
         # Persist the fetch result: count + the merge plan reference the
-        # batch several times (affected-partition collect, anti-join,
-        # union), and without pinning it each reference would re-run the
-        # connector fetch — 4× the API cost, and a live connector could
+        # batch several times (affected-partition collect, the write, and
+        # on re-merged partitions the anti-join and union), and without
+        # pinning it each reference would re-run the connector fetch —
+        # several times the API cost, and a live connector could
         # return *different* rows per execution, making the merge's
         # branches disagree (duplicate/dropped keys).
         # Observation API: batch telemetry (row count, symbol spread,

@@ -22,10 +22,17 @@ INSIDE the version dir, schema evolution commits atomically with its
 data (a failed merge leaves no evolved schema behind), and time travel
 replays the schema as of that version — both Delta behaviors.
 
+Every commit runs its plan ONCE: CHECK constraints are fused into the
+write job's projection (a violating row fails the write, whose claimed
+version dir is then removed), never checked by a separate pass over the
+commit plan.
+
 Scale posture: `partition_by` lays the fact table out by date (mirrors
 BigQuery `PARTITION BY date`, SURVEY.md §4) so incremental merges and
 date-range scans prune files; merge itself is the relational anti-join ∪
-winners plan from operators/merge.py, which shuffles only on the key.
+winners plan from operators/merge.py, which shuffles only on the key —
+or, when the batch touches no existing partition (the daily sync), a
+plain append of the deduped batch with no join at all.
 """
 
 from __future__ import annotations
@@ -40,6 +47,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.dedup import topk_per_group
 from ..operators.merge import merge_dataframes
 
 _CURRENT = "_CURRENT"
@@ -48,6 +56,10 @@ _SCHEMA = "_schema.json"
 # Strict version-dir name: a stray file or partial artifact (e.g.
 # 'v_tmp') must never be parsed as a version (round-2 review).
 _VERSION_RE = re.compile(r"^v\d{5}$")
+
+
+def _violation_message(name: str, predicate: str) -> str:
+    return f"CHECK constraint '{name}' violated: {predicate}"
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -73,8 +85,9 @@ class ParquetTable:
         self.partition_by = tuple(partition_by)
         # Delta CHECK-constraint analog: {name: SQL predicate}. Enforced
         # on every commit with SQL CHECK semantics — a row violates only
-        # when the predicate is FALSE (NULL passes). One predicate scan
-        # of the commit batch (the new version only, never the table).
+        # when the predicate is FALSE (NULL passes). Evaluated inside the
+        # write job on the rows being written (the new version only,
+        # never the hardlinked rest of the table).
         self.constraints = dict(constraints or {})
         os.makedirs(os.path.join(path, _VERSIONS), exist_ok=True)
         # The current version's schema snapshot supersedes the
@@ -113,23 +126,6 @@ class ParquetTable:
         v = self._pointer()
         return int(v[1:]) if v else 0
 
-    def _check_constraints(self, df: DataFrame) -> None:
-        """Enforce CHECK constraints on the commit batch.
-
-        The check is a separate Spark action from the write that
-        follows, so commit inputs must be DETERMINISTIC (or persisted by
-        the caller, as the sync path does): a nondeterministic source
-        could present different rows to the check and the write. Delta
-        has the same contract — its invariant check runs inside the
-        write job only because the log gives it a transaction to abort.
-        """
-        for name, predicate in self.constraints.items():
-            bad = df.filter(F.expr(predicate).eqNullSafe(F.lit(False))).limit(1)
-            if bad.take(1):
-                raise ValueError(
-                    f"CHECK constraint '{name}' violated: {predicate}"
-                )
-
     def _claim_version(self, expected_version: int | None) -> tuple[int, str, str]:
         """Optimistic-concurrency gate: validate the caller's read
         snapshot is still current, then claim the next version number
@@ -158,18 +154,91 @@ class ParquetTable:
             ) from None
         return version, vname, os.path.join(vdir, vname)
 
-    def _commit(self, df: DataFrame, expected_version: int | None = None) -> None:
-        self._check_constraints(df)
+    def _guarded_projection(self, df: DataFrame) -> DataFrame:
+        """Project `df` onto the table schema with every CHECK constraint
+        fused in: one non-partition column becomes
+        `CASE WHEN <pred> IS FALSE THEN raise_error(...) ELSE col END`,
+        so the write job itself fails on the first violating row — no
+        separate validation pass over the commit plan. A projected
+        column (not a Filter) so Catalyst can neither prune the guard
+        nor push it below the merge's anti-join onto rows that are
+        never written."""
+        names = [f.name for f in self.schema.fields]
+        if not self.constraints:
+            return df.select(*names)
+        guard = next((c for c in names if c not in self.partition_by), names[0])
+        checked = None
+        for name, predicate in self.constraints.items():
+            violated = F.expr(predicate).eqNullSafe(F.lit(False))
+            fail = F.raise_error(F.lit(_violation_message(name, predicate)))
+            checked = (
+                F.when(violated, fail)
+                if checked is None
+                else checked.when(violated, fail)
+            )
+        guarded = checked.otherwise(F.col(guard)).alias(guard)
+        return df.select(*[guarded if c == guard else F.col(c) for c in names])
+
+    def _commit(
+        self,
+        df: DataFrame,
+        expected_version: int | None = None,
+        carry_untouched: str | None = None,
+    ) -> None:
+        """Write `df` as the next version and repoint `_CURRENT`. The
+        plan runs once: CHECK constraints are fused into the write.
+
+        `carry_untouched=pcol`: `df` covers only some `pcol` partitions;
+        every other partition dir of the current version is hardlinked
+        into the new one. A failed write removes the claimed version dir
+        and its claim marker, so the version number is reused by the
+        next commit; a CHECK violation surfaces as ValueError."""
+        current = self._pointer()
         _, vname, target = self._claim_version(expected_version)
-        writer = df.select(*[f.name for f in self.schema.fields]).write.mode("overwrite")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(target)
-        self._write_version_schema(target)
+        try:
+            writer = self._guarded_projection(df).write.mode("overwrite")
+            if self.partition_by:
+                writer = writer.partitionBy(*self.partition_by)
+            writer.parquet(target)
+            self._write_version_schema(target)
+            if carry_untouched and current:
+                self._link_untouched(current, target, carry_untouched)
+        except Exception as e:
+            shutil.rmtree(target, ignore_errors=True)
+            claim = os.path.join(self.path, _VERSIONS, f".claim_{vname}")
+            if os.path.exists(claim):
+                os.remove(claim)
+            for name, predicate in self.constraints.items():
+                msg = _violation_message(name, predicate)
+                if msg in str(e):
+                    raise ValueError(msg) from None
+            raise
         tmp = os.path.join(self.path, f".{_CURRENT}.tmp")
         with open(tmp, "w") as f:
             f.write(vname)
         os.replace(tmp, os.path.join(self.path, _CURRENT))  # atomic repoint
+
+    def _link_untouched(self, current: str, target: str, pcol: str) -> None:
+        """Hardlink every `pcol=` dir of version `current` that the new
+        version `target` did not rewrite — zero data movement."""
+        src_root = os.path.join(self.path, _VERSIONS, current)
+        # The rewritten (affected) partitions are exactly the pcol= dirs
+        # Spark just wrote into `target` — merge carries every affected
+        # target row, so an affected partition never comes out empty.
+        # Deriving the exclusion set from the target listing (not from
+        # str(v)) keeps it correct for values Spark Hive-escapes in dir
+        # names (':', '%', '#', ...).
+        written_dirs = {e for e in os.listdir(target) if e.startswith(f"{pcol}=")}
+        for entry in os.listdir(src_root):
+            if not entry.startswith(f"{pcol}=") or entry in written_dirs:
+                continue
+            src_dir = os.path.join(src_root, entry)
+            dst_dir = os.path.join(target, entry)
+            os.makedirs(dst_dir, exist_ok=True)
+            for fn in os.listdir(src_dir):
+                dst = os.path.join(dst_dir, fn)
+                if not os.path.exists(dst):
+                    os.link(os.path.join(src_dir, fn), dst)
 
     # -- operators ---------------------------------------------------------
     def exists(self) -> bool:
@@ -278,15 +347,20 @@ class ParquetTable:
         file-level rewrite Delta's MERGE does via its log, and the
         reason an incremental sync of a trailing window costs
         O(window), not O(table) (SCALE.md "Merge / upsert").
+
+        Append-only fast path: when the pruned target slice is empty —
+        the batch lands only in partitions the table does not have yet,
+        as a daily sync's does — every source key is an insert, so the
+        commit is the deduped batch with `set_on_write` applied: no
+        classify join, no anti-join. The rows equal merge_dataframes'.
+
+        The empty-batch guard costs no job of its own on the pruned path
+        (the affected-partition collect shows an empty batch); an empty
+        batch commits nothing and evolves no schema. The commit runs its
+        plan once, but the pruned path reads `source` twice (that
+        collect and the write), so a nondeterministic source should be
+        persisted by the caller, as the sync path does.
         """
-        # P6 non-empty guard, at the STORE boundary: an empty source
-        # must not burn a version (found by the stateful model test —
-        # an hourly sync poll with no new data was committing 24
-        # identical version dirs a day until vacuum). Schema evolution
-        # with an empty source is also skipped: nothing committed,
-        # nothing evolved, atomically consistent.
-        if source.isEmpty():
-            return
         old_schema = self.schema
         if evolve_schema:
             existing = {f.name for f in self.schema.fields}
@@ -297,21 +371,22 @@ class ParquetTable:
             ]
             if added:
                 # In-memory only: the commit below snapshots it into the
-                # version dir; a failed commit rolls it back (atomic).
+                # version dir; a failed or skipped commit rolls it back.
                 self.schema = T.StructType(list(self.schema.fields) + added)
+        committed = False
         try:
             for attempt in range(conflict_retries + 1):
                 try:
-                    self._merge_impl(
+                    committed = self._merge_impl(
                         source, keys, freshness_col, dedup_order, set_on_write
                     )
                     break
                 except ConcurrentWriteError:
                     if attempt == conflict_retries:
                         raise
-        except Exception:
-            self.schema = old_schema
-            raise
+        finally:
+            if not committed:
+                self.schema = old_schema
 
     def _merge_impl(
         self,
@@ -320,7 +395,13 @@ class ParquetTable:
         freshness_col: str | None,
         dedup_order: Sequence[Column | str] | None,
         set_on_write: dict[str, Column] | None,
-    ) -> None:
+    ) -> bool:
+        """One merge attempt; returns whether a version was committed.
+
+        P6 non-empty guard, at the STORE boundary: an empty source must
+        not burn a version (found by the stateful model test — an hourly
+        sync poll with no new data was committing 24 identical version
+        dirs a day until vacuum), nor evolve the schema."""
         # Read snapshot for the optimistic-concurrency check: every
         # self.read() below resolves THIS version, and the commit
         # refuses if the table moved past it meanwhile.
@@ -330,81 +411,47 @@ class ParquetTable:
             if len(self.partition_by) == 1 and self.partition_by[0] in keys
             else None
         )
-        if pcol is None or not self.exists():
-            self._commit(
-                merge_dataframes(
-                    self.read(), source, keys, freshness_col, dedup_order, set_on_write
-                ),
-                expected_version=base,
+
+        def full_merge() -> DataFrame:
+            return merge_dataframes(
+                self.read(), source, keys, freshness_col, dedup_order, set_on_write
             )
-            return
+
+        if pcol is None or not self.exists():
+            if source.isEmpty():
+                return False
+            self._commit(full_merge(), expected_version=base)
+            return True
         # Affected partition values: one row per distinct source value —
-        # bounded by the batch's window, safe to collect.
+        # bounded by the batch's window, safe to collect. An empty list
+        # is the empty-batch guard: no separate emptiness job.
         affected = [r[0] for r in source.select(pcol).distinct().collect()]
         if not affected:
-            return
+            return False
         if any(v is None for v in affected):
             # NULL partition values break both the isin() pruning filter
             # (NULL never matches) and the hardlink exclusion (Spark
             # writes __HIVE_DEFAULT_PARTITION__, not 'None') — take the
             # always-correct full-merge path for such batches.
-            self._commit(
-                merge_dataframes(
-                    self.read(), source, keys, freshness_col, dedup_order, set_on_write
-                ),
-                expected_version=base,
-            )
-            return
+            self._commit(full_merge(), expected_version=base)
+            return True
         tgt_affected = self.read().filter(F.col(pcol).isin(affected))
-        merged = merge_dataframes(
-            tgt_affected, source, keys, freshness_col, dedup_order, set_on_write
-        )
-        self._commit_partitions(merged, pcol, affected, expected_version=base)
-
-    def _commit_partitions(
-        self,
-        merged: DataFrame,
-        pcol: str,
-        affected: list,
-        expected_version: int | None = None,
-    ) -> None:
-        """Write `merged` (covering `affected` partition values) as a new
-        version; hardlink every other partition dir from the current one."""
-        self._check_constraints(merged)
-        current = self._pointer()
-        _, vname, target = self._claim_version(expected_version)
-        (
-            merged.select(*[f.name for f in self.schema.fields])
-            .write.mode("overwrite")
-            .partitionBy(*self.partition_by)
-            .parquet(target)
-        )
-        self._write_version_schema(target)
-        if current:
-            src_root = os.path.join(self.path, _VERSIONS, current)
-            # The rewritten (affected) partitions are exactly the pcol=
-            # dirs Spark just wrote into `target` — merge carries every
-            # affected target row, so an affected partition never comes
-            # out empty. Deriving the exclusion set from the target
-            # listing (not from str(v)) keeps it correct for values
-            # Spark Hive-escapes in dir names (':', '%', '#', ...).
-            written_dirs = {
-                e for e in os.listdir(target) if e.startswith(f"{pcol}=")
-            }
-            for entry in os.listdir(src_root):
-                if not entry.startswith(f"{pcol}=") or entry in written_dirs:
-                    continue
-                src_dir = os.path.join(src_root, entry)
-                dst_dir = os.path.join(target, entry)
-                os.makedirs(dst_dir, exist_ok=True)
-                for fn in os.listdir(src_dir):
-                    dst = os.path.join(dst_dir, fn)
-                    if not os.path.exists(dst):
-                        os.link(os.path.join(src_dir, fn), dst)
-        tmp = os.path.join(self.path, f".{_CURRENT}.tmp")
-        with open(tmp, "w") as f:
-            f.write(vname)
-        os.replace(tmp, os.path.join(self.path, _CURRENT))
+        if tgt_affected.isEmpty():
+            # Append-only: every source key is an insert, so this is
+            # exactly what merge_dataframes computes, minus its classify
+            # join and anti-join against an empty slice. Partition
+            # pruning leaves the isEmpty() above no files to scan.
+            merged = source
+            if dedup_order is not None:
+                merged = topk_per_group(merged, keys, dedup_order, k=1)
+            if set_on_write:
+                merged = merged.withColumns(dict(set_on_write))
+        else:
+            merged = merge_dataframes(
+                tgt_affected, source, keys, freshness_col, dedup_order, set_on_write
+            )
+        self._commit(merged, expected_version=base, carry_untouched=pcol)
+        return True
 
     def optimize(
         self,

@@ -318,8 +318,8 @@ def foreach_batch_merge(
     freshness guard then arbitrates across batches."""
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # merge() skips an empty batch itself; a check here would cost
+        # one more Spark job per epoch.
         table.merge(
             batch_df, keys=keys, freshness_col=freshness_col,
             dedup_order=dedup_order,

@@ -107,7 +107,14 @@ def main() -> None:
             text=True,
             cwd=REPO,
         )
-        line = [l for l in r.stdout.splitlines() if l.startswith("{")][-1]
+        if r.returncode != 0:
+            sys.stderr.write(r.stderr)
+            sys.exit(f"cpus={cpus}: child failed with exit status {r.returncode}")
+        lines = [l for l in r.stdout.splitlines() if l.startswith("{")]
+        if not lines:
+            sys.stderr.write(r.stderr)
+            sys.exit(f"cpus={cpus}: child printed no JSON result line")
+        line = lines[-1]
         results[str(cpus)] = json.loads(line)
         print(f"cpus={cpus}: {line}", file=sys.stderr)
     lo, hi = str(cpu_list[0]), str(cpu_list[-1])

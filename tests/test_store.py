@@ -589,3 +589,115 @@ def test_restore_partitioned_version_with_hardlinked_dirs(spark, tmp_path):
     t.restore(v_good)
     got = {(r.k, str(r.d)): r.v for r in t.read().collect()}
     assert got == {("A", "2024-01-01"): 1.0, ("B", "2024-01-02"): 2.0}
+
+
+# ------------------------------------------- fused CHECK / append-only --
+@pytest.mark.parametrize("how", ["overwrite", "merge_existing", "merge_new"])
+def test_check_violation_leaves_no_version_behind(spark, tmp_path, how):
+    """The CHECK constraint runs inside the write job: a violating batch
+    raises ValueError, and the claimed version dir and claim marker are
+    removed, so the table, its history and the next version number are
+    exactly as before — through overwrite, the pruned merge of an
+    existing partition, and the append-only merge into new ones."""
+    import os
+
+    t = ParquetTable(
+        spark, str(tmp_path / "cv"), PART_SCHEMA, partition_by=("d",),
+        constraints={"v_pos": "v > 0"},
+    )
+    t.overwrite(
+        spark.createDataFrame(
+            _rows(("A", "2024-01-01", 1.0, "2024-01-01T00:00:00"),
+                  ("B", "2024-01-02", 2.0, "2024-01-01T00:00:00")), PART_SCHEMA)
+    )
+    history = t.history()
+    before = sorted(map(tuple, t.read().collect()))
+    nxt = f"v{t.current_version() + 1:05d}"
+    bad_day = "2024-01-02" if how == "merge_existing" else "2024-01-03"
+    bad = spark.createDataFrame(
+        _rows(("B", bad_day, -5.0, "2024-01-03T00:00:00"),
+              ("C", bad_day, 3.0, "2024-01-03T00:00:00")), PART_SCHEMA)
+    with pytest.raises(ValueError, match="v_pos"):
+        if how == "overwrite":
+            t.overwrite(bad)
+        else:
+            t.merge(bad, keys=("k", "d"), freshness_col="extracted_at")
+    assert t.history() == history
+    assert sorted(map(tuple, t.read().collect())) == before
+    vdir = os.path.join(t.path, "_versions")
+    assert not os.path.exists(os.path.join(vdir, nxt))
+    assert not os.path.exists(os.path.join(vdir, f".claim_{nxt}"))
+    ok = spark.createDataFrame(
+        _rows(("C", "2024-01-03", 3.0, "2024-01-03T00:00:00")), PART_SCHEMA)
+    t.merge(ok, keys=("k", "d"), freshness_col="extracted_at")
+    assert t._pointer() == nxt
+    assert t.read().count() == len(before) + 1
+
+
+def test_append_only_merge_equals_full_merge(spark, tmp_path, monkeypatch):
+    """A batch that lands only in new partitions skips the classify and
+    anti-join plan (merge_dataframes is never called) yet commits the
+    same rows merge_dataframes computes over the full table: in-batch
+    duplicates deduped by dedup_order, set_on_write applied, untouched
+    partitions carried as hardlinks."""
+    import os
+
+    from pse_stocks_etl_spark.operators.merge import merge_dataframes
+    from pse_stocks_etl_spark.store import parquet_table as ptmod
+
+    t = ParquetTable(spark, str(tmp_path / "ao"), PART_SCHEMA, partition_by=("d",))
+    t.overwrite(
+        spark.createDataFrame(
+            _rows(("A", "2024-01-01", 1.0, "2024-01-01T00:00:00"),
+                  ("B", "2024-01-02", 2.0, "2024-01-01T00:00:00")), PART_SCHEMA)
+    )
+    src = spark.createDataFrame(
+        _rows(("A", "2024-01-03", 5.0, "2024-01-03T00:00:00"),
+              ("A", "2024-01-03", 7.0, "2024-01-02T00:00:00"),   # wins on v
+              ("B", "2024-01-04", 3.0, "2024-01-03T00:00:00"),
+              ("B", "2024-01-04", 3.0, "2024-01-04T00:00:00"),   # wins on ts
+              ("C", "2024-01-04", 4.0, "2024-01-04T00:00:00")), PART_SCHEMA)
+    kw = dict(
+        freshness_col="extracted_at",
+        dedup_order=[F.col("v").desc(), F.col("extracted_at").desc()],
+        set_on_write={"v": F.col("v") * 10},
+    )
+    expected = sorted(
+        map(tuple, merge_dataframes(t.read(), src, ("k", "d"), **kw).collect())
+    )
+
+    def no_join_merge(*args, **kwargs):
+        raise AssertionError("append-only merge must not plan the merge joins")
+
+    monkeypatch.setattr(ptmod, "merge_dataframes", no_join_merge)
+    v1 = os.path.join(t.path, "_versions", t._pointer(), "d=2024-01-01")
+    t.merge(src, keys=("k", "d"), **kw)
+    assert sorted(map(tuple, t.read().collect())) == expected
+    assert len(expected) == 5
+    v2 = os.path.join(t.path, "_versions", t._pointer(), "d=2024-01-01")
+    assert {os.stat(os.path.join(v1, f)).st_ino for f in os.listdir(v1)} == {
+        os.stat(os.path.join(v2, f)).st_ino for f in os.listdir(v2)
+    }
+
+
+# Spark jobs of one daily PseDatasets.sync (8 symbols, one new trading
+# day) before the CHECK constraint was fused into the write and the
+# append-only merge path existed.
+_DAILY_SYNC_JOBS_BEFORE = 20
+
+
+def test_daily_sync_job_count(spark, tmp_path):
+    from pse_stocks_etl_spark.plans.sync import PseDatasets
+
+    ds = PseDatasets(spark, str(tmp_path / "pse"))
+    ds.initdb()
+    ds.backfill(today="2024-01-20")
+    sc = spark.sparkContext
+    sc.setJobGroup("test_daily_sync_job_count", "one daily sync")
+    try:
+        r = ds.sync(today="2024-01-23")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert r["price_rows"] == len(ds.connector.symbols)
+    jobs = sc.statusTracker().getJobIdsForGroup("test_daily_sync_job_count")
+    assert len(jobs) <= _DAILY_SYNC_JOBS_BEFORE - 5, len(jobs)
