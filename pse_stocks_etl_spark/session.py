@@ -21,6 +21,22 @@ def default_parallelism() -> int:
         return os.cpu_count() or 8
 
 
+def default_driver_memory() -> str:
+    """`spark.driver.memory` when SPARK_DRIVER_MEMORY is unset: a
+    quarter of the host's physical memory, capped at 48g. A 48g heap on
+    a smaller host never triggers a full GC before the kernel OOM-kills
+    the JVM, and the tests and child benches run more than one JVM."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    mb = int(line.split()[1]) // 4096
+                    return f"{min(max(mb, 1024), 48 << 10)}m"
+    except (OSError, ValueError):
+        pass
+    return "48g"
+
+
 def get_spark(
     app_name: str = "pse-stocks-etl-spark",
     master: str | None = None,
@@ -53,7 +69,7 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory())
     )
     try:  # Delta is optional in this image; enable iff present.
         import delta  # noqa: F401

@@ -33,7 +33,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     session timezone. ns→µs truncation matches DuckDB's.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     declared = TESTDATA_SCHEMAS.get(name)
     if declared is not None:
         actual = dict(df.dtypes)
@@ -49,6 +49,42 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                     ),
                 )
     return df
+
+
+# Inferring a parquet schema reads the footers on the driver: about
+# 80 ms per table even for a tiny file, more than the rest of planning
+# a small query. The schema is a function of the files and of the
+# confs that steer parquet type mapping, so it is cached under both.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+_SCHEMAS: dict[tuple, T.StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)`, inferring the schema only once for
+    the same files (path, mtime, size) under the same confs."""
+    try:
+        if os.path.isfile(path):
+            files = [path]
+        else:
+            files = sorted(os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs)
+        stats = tuple((f, st.st_mtime_ns, st.st_size) for f in files for st in [os.stat(f)])
+    except OSError:
+        stats = ()
+    if not stats:
+        return spark.read.parquet(path)  # Spark reports a missing/empty path
+    key = (stats, tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS))
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
 
 
 def scan_tasks_estimate(sf_dir: str, name: str) -> int:

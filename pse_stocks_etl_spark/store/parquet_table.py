@@ -12,20 +12,21 @@ DeltaTable):
   K9  vacuum           deltalake_sync.py:90,255
   K10 empty init       spark_deltalake_sync.py:125-128,194-198
 
-Commit protocol: every write lands in a fresh `_versions/v{N}` directory
-(data + a `_schema.json` snapshot), then `_CURRENT` is atomically
-repointed (os.replace of a one-line pointer file — the same pointer-swap
-idea as the Delta log). Readers resolve `_CURRENT` at read time and
-never observe partial writes; failed writes leave only orphan version
-dirs, which `vacuum()` collects. Because the schema snapshot lives
-INSIDE the version dir, schema evolution commits atomically with its
-data (a failed merge leaves no evolved schema behind), and time travel
-replays the schema as of that version — both Delta behaviors.
+Commit protocol: every write is staged in a unique
+`_versions/.stage-<base>-<uuid>` dir (data + a `_schema.json` snapshot),
+then published by one os.rename onto `_versions/v{base+1}` — the
+put-if-absent of the Delta log, since a rename onto a published
+(non-empty) version dir fails. The current version is the highest
+`vNNNNN` dir. A writer killed at any point leaves at most a staging dir,
+which blocks no commit and which `vacuum()` reaps. Because the schema
+snapshot lives INSIDE the version dir, schema evolution commits
+atomically with its data, and time travel replays the schema as of that
+version — both Delta behaviors.
 
 Every commit runs its plan ONCE: CHECK constraints are fused into the
-write job's projection (a violating row fails the write, whose claimed
-version dir is then removed), never checked by a separate pass over the
-commit plan.
+write job's projection (a violating row fails the write, whose staging
+dir is then removed), never checked by a separate pass over the commit
+plan.
 
 Scale posture: `partition_by` lays the fact table out by date (mirrors
 BigQuery `PARTITION BY date`, SURVEY.md §4) so incremental merges and
@@ -37,10 +38,12 @@ plain append of the deduped batch with no join at all.
 
 from __future__ import annotations
 
+import errno
 import json
 import os
 import re
 import shutil
+import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -50,12 +53,14 @@ from pyspark.sql import types as T
 from ..operators.dedup import topk_per_group
 from ..operators.merge import merge_dataframes
 
-_CURRENT = "_CURRENT"
 _VERSIONS = "_versions"
 _SCHEMA = "_schema.json"
 # Strict version-dir name: a stray file or partial artifact (e.g.
 # 'v_tmp') must never be parsed as a version (round-2 review).
 _VERSION_RE = re.compile(r"^v\d{5}$")
+# Uncommitted dirs: a writer's staging dir (named after its base), trash.
+_STAGE_RE = re.compile(r"^\.stage-(\d+)-")
+_TRASH = ".trash-"
 
 
 def _violation_message(name: str, predicate: str) -> str:
@@ -110,49 +115,18 @@ class ParquetTable:
         """Snapshot self.schema into the (not-yet-committed) version dir.
         Spark's parquet reader ignores underscore-prefixed files, so the
         snapshot can live beside the data it describes — and the
-        _CURRENT repoint then commits schema + data atomically."""
+        publishing rename then commits schema + data atomically."""
         with open(os.path.join(target, _SCHEMA), "w") as f:
             json.dump(self.schema.jsonValue(), f)
 
     # -- commit protocol ---------------------------------------------------
     def _pointer(self) -> str | None:
-        p = os.path.join(self.path, _CURRENT)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return f.read().strip() or None
+        v = self.current_version()
+        return f"v{v:05d}" if v else None
 
     def current_version(self) -> int:
-        v = self._pointer()
-        return int(v[1:]) if v else 0
-
-    def _claim_version(self, expected_version: int | None) -> tuple[int, str, str]:
-        """Optimistic-concurrency gate: validate the caller's read
-        snapshot is still current, then claim the next version number
-        with an O_CREAT|O_EXCL marker — an atomic filesystem primitive,
-        so two racing writers can never both win the same version (the
-        single-writer guarantee Delta gets from its log commit; on a
-        Delta cluster this maps to the txn version check)."""
-        current = self.current_version()
-        if expected_version is not None and current != expected_version:
-            raise ConcurrentWriteError(
-                f"table advanced to v{current} after this transaction read "
-                f"v{expected_version} — re-derive and retry"
-            )
-        version = current + 1
-        vname = f"v{version:05d}"
-        vdir = os.path.join(self.path, _VERSIONS)
-        os.makedirs(vdir, exist_ok=True)
-        try:
-            fd = os.open(
-                os.path.join(vdir, f".claim_{vname}"), os.O_CREAT | os.O_EXCL
-            )
-            os.close(fd)
-        except FileExistsError:
-            raise ConcurrentWriteError(
-                f"another writer already claimed {vname}"
-            ) from None
-        return version, vname, os.path.join(vdir, vname)
+        """The highest published version; 0 before the first commit."""
+        return max(self.history(), default=0)
 
     def _guarded_projection(self, df: DataFrame) -> DataFrame:
         """Project `df` onto the table schema with every CHECK constraint
@@ -185,38 +159,61 @@ class ParquetTable:
         expected_version: int | None = None,
         carry_untouched: str | None = None,
     ) -> None:
-        """Write `df` as the next version and repoint `_CURRENT`. The
-        plan runs once: CHECK constraints are fused into the write.
-
-        `carry_untouched=pcol`: `df` covers only some `pcol` partitions;
-        every other partition dir of the current version is hardlinked
-        into the new one. A failed write removes the claimed version dir
-        and its claim marker, so the version number is reused by the
-        next commit; a CHECK violation surfaces as ValueError."""
-        current = self._pointer()
-        _, vname, target = self._claim_version(expected_version)
+        """Stage `df` as the next version and publish it; the commit
+        refuses if the table moved past `expected_version` (the caller's
+        read snapshot). The plan runs once: CHECK constraints are fused
+        into the write. `carry_untouched=pcol`: `df` covers only some
+        `pcol` partitions; every other one of the base version is
+        hardlinked in. A failed write removes its staging dir; a CHECK
+        violation surfaces as ValueError."""
+        base = self.current_version()
+        if expected_version not in (None, base):
+            raise ConcurrentWriteError(
+                f"table advanced to v{base} after this transaction read "
+                f"v{expected_version} — re-derive and retry"
+            )
+        stage = os.path.join(self.path, _VERSIONS, f".stage-{base:05d}-{uuid.uuid4().hex}")
         try:
             writer = self._guarded_projection(df).write.mode("overwrite")
             if self.partition_by:
                 writer = writer.partitionBy(*self.partition_by)
-            writer.parquet(target)
-            self._write_version_schema(target)
-            if carry_untouched and current:
-                self._link_untouched(current, target, carry_untouched)
+            writer.parquet(stage)
+            self._write_version_schema(stage)
+            if carry_untouched and base:
+                self._link_untouched(f"v{base:05d}", stage, carry_untouched)
+            self._publish(stage, base + 1)
         except Exception as e:
-            shutil.rmtree(target, ignore_errors=True)
-            claim = os.path.join(self.path, _VERSIONS, f".claim_{vname}")
-            if os.path.exists(claim):
-                os.remove(claim)
+            shutil.rmtree(stage, ignore_errors=True)
             for name, predicate in self.constraints.items():
                 msg = _violation_message(name, predicate)
                 if msg in str(e):
                     raise ValueError(msg) from None
             raise
-        tmp = os.path.join(self.path, f".{_CURRENT}.tmp")
-        with open(tmp, "w") as f:
-            f.write(vname)
-        os.replace(tmp, os.path.join(self.path, _CURRENT))  # atomic repoint
+
+    def _publish(self, stage: str, version: int) -> None:
+        """The commit point: rename the finished staging dir onto
+        `v{version}`. A rename onto a non-empty dir fails, so two racing
+        writers can never both win a version number."""
+        vname = f"v{version:05d}"
+        target = os.path.join(self.path, _VERSIONS, vname)
+        try:
+            os.rename(stage, target)
+        except OSError as e:
+            if e.errno not in (errno.ENOTEMPTY, errno.EEXIST):
+                raise
+            raise ConcurrentWriteError(f"another writer committed {vname}") from None
+        if self.current_version() > version:
+            # Only a stale writer whose target number was vacuumed lands
+            # below a newer version: withdraw, so the current version
+            # never moves backwards.
+            self._discard(target)
+            raise ConcurrentWriteError(f"{vname} is older than the current version")
+
+    def _discard(self, path: str) -> None:
+        """Rename out of the version namespace, then delete."""
+        trash = os.path.join(os.path.dirname(path), f"{_TRASH}{uuid.uuid4().hex}")
+        os.rename(path, trash)
+        shutil.rmtree(trash)
 
     def _link_untouched(self, current: str, target: str, pcol: str) -> None:
         """Hardlink every `pcol=` dir of version `current` that the new
@@ -242,7 +239,7 @@ class ParquetTable:
 
     # -- operators ---------------------------------------------------------
     def exists(self) -> bool:
-        return self._pointer() is not None
+        return bool(self.history())
 
     def init_empty(self) -> None:
         """K10: create the table as an empty typed relation."""
@@ -322,14 +319,11 @@ class ParquetTable:
         """K2/K3: keyed upsert (optionally freshness-guarded) with the
         mandatory pre-merge source dedup (SURVEY.md §7.5 risk 4).
 
-        Optimistic concurrency: the merge snapshots the current version
-        on entry and the commit refuses if another writer advanced the
-        table meanwhile (ConcurrentWriteError). Because a keyed merge
-        is re-derivable from any newer snapshot, up to
-        `conflict_retries` automatic retries re-read and re-merge —
-        Delta's conflict-then-retry semantics for non-overlapping
-        writers. Pass `conflict_retries=0` to surface conflicts to the
-        caller.
+        Optimistic concurrency: the commit refuses if another writer
+        advanced the table past the merge's read snapshot
+        (ConcurrentWriteError); a keyed merge is re-derivable, so up to
+        `conflict_retries` retries re-read and re-merge — Delta's
+        conflict-then-retry for non-overlapping writers.
 
         `evolve_schema=True` is Delta's `mergeSchema`: source columns
         the table lacks are appended (nullable) to the table schema,
@@ -405,7 +399,7 @@ class ParquetTable:
         # Read snapshot for the optimistic-concurrency check: every
         # self.read() below resolves THIS version, and the commit
         # refuses if the table moved past it meanwhile.
-        base = self.current_version() if self.exists() else None
+        base = self.current_version()
         pcol = (
             self.partition_by[0]
             if len(self.partition_by) == 1 and self.partition_by[0] in keys
@@ -417,7 +411,7 @@ class ParquetTable:
                 self.read(), source, keys, freshness_col, dedup_order, set_on_write
             )
 
-        if pcol is None or not self.exists():
+        if pcol is None or not base:
             if source.isEmpty():
                 return False
             self._commit(full_merge(), expected_version=base)
@@ -473,8 +467,10 @@ class ParquetTable:
         sort clusters only the leading key; bit interleaving gives every
         cluster column min/max-skippable file ranges, which is the whole
         point at 100 TB — a predicate on the SECOND key alone still
-        prunes files (proof: tests/test_plans_physical.py).
+        prunes files (proof: tests/test_plans_physical.py). Commits only
+        over the version it read (else ConcurrentWriteError).
         """
+        base = self.current_version()
         df = self.read()
         if len(cluster_by) >= 2:
             z = self._zvalue(df, cluster_by, zorder_bits)
@@ -493,7 +489,7 @@ class ParquetTable:
             df = df.sortWithinPartitions(*cluster_by)
         else:
             df = df.repartitionByRange(*cluster_by).sortWithinPartitions(*cluster_by)
-        self._commit(df)
+        self._commit(df, expected_version=base)
 
     @staticmethod
     def _zvalue(df: DataFrame, cluster_by: Sequence[str], bits: int) -> Column:
@@ -539,30 +535,33 @@ class ParquetTable:
         SQL/Delta DELETE semantics: only rows where the predicate is
         TRUE are removed — rows where it evaluates NULL are kept, so
         the keep-filter must be null-safe (`~condition` alone would
-        silently drop NULL-predicate rows).
+        silently drop NULL-predicate rows). A conditional delete commits
+        only over the version it read (else ConcurrentWriteError).
         """
         if condition is None:
             self._commit(self.spark.createDataFrame([], self.schema))
         else:
-            self._commit(self.read().filter(~condition.eqNullSafe(F.lit(True))))
+            base = self.current_version()
+            kept = self.read().filter(~condition.eqNullSafe(F.lit(True)))
+            self._commit(kept, expected_version=base)
 
     def vacuum(self, retain_versions: int = 2) -> list[str]:
-        """K9: drop version dirs older than the newest `retain_versions`.
-        Returns removed version names."""
+        """K9: drop version dirs older than the newest `retain_versions`
+        (never the current one), staging dirs whose base is no longer
+        current (that writer can never publish) and leftover trash. A
+        dir is renamed away before it is deleted, so a killed vacuum
+        never leaves a half-deleted version. Returns removed versions."""
         vdir = os.path.join(self.path, _VERSIONS)
-        versions = sorted(v for v in os.listdir(vdir) if _VERSION_RE.match(v))
-        current = self._pointer()
-        keep = set(versions[-retain_versions:])
-        if current:
-            keep.add(current)
-        removed = []
-        for v in versions:
-            if v not in keep:
-                shutil.rmtree(os.path.join(vdir, v))
-                claim = os.path.join(vdir, f".claim_{v}")
-                if os.path.exists(claim):
-                    os.remove(claim)
-                removed.append(v)
+        entries = sorted(os.listdir(vdir))
+        versions = [e for e in entries if _VERSION_RE.match(e)]
+        removed = [v for v in versions[:-1] if v not in versions[-retain_versions:]]
+        current = self.current_version()
+        for e in entries:
+            stage = _STAGE_RE.match(e)
+            if e in removed or (stage and int(stage[1]) < current):
+                self._discard(os.path.join(vdir, e))
+            elif e.startswith(_TRASH):
+                shutil.rmtree(os.path.join(vdir, e))
         return removed
 
     def drop(self) -> None:

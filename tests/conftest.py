@@ -1,8 +1,12 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import re
+import signal
+import subprocess
 import sys
+import threading
 
 import pytest
 
@@ -16,7 +20,22 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from pse_stocks_etl_spark.session import get_spark
 
-    s = get_spark("tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark(
+        "tests",
+        master="local[8]",
+        shuffle_partitions=8,
+        # Neither setting changes a result. The suite runs thousands of
+        # small plans, so per-plan driver overhead is most of its time:
+        # do not capture the Python call site of every DataFrame call
+        # (it only annotates error messages, at several py4j round
+        # trips per call), and keep the compiled code of every plan,
+        # since each parity matrix compiles the same plans again on
+        # another input (the default cache holds 100 classes).
+        **{
+            "spark.python.sql.dataFrameDebugging.enabled": "false",
+            "spark.sql.codegen.cache.maxEntries": "4000",
+        },
+    )
     yield s
 
 
@@ -127,3 +146,60 @@ def capped_duck():
     before the cap landed). Matrix fixtures register their own views,
     so this only standardizes the resource settings."""
     return _RecyclingDuck()
+
+
+class Background:
+    """A child process started at collection time and awaited by the
+    test that checks it. Such a test module sets `AWAITS_BACKGROUND =
+    True` and runs after every other test, so its children overlap the
+    rest of the suite instead of adding to its wall time. `timeout`
+    bounds the child's own run, as `subprocess.run(timeout=)` does."""
+
+    _started: list["Background"] = []
+
+    def __init__(self, argv: list[str], env: dict, timeout: float):
+        self.proc = subprocess.Popen(
+            argv, env=env, stdout=subprocess.PIPE, stderr=subprocess.PIPE,
+            text=True, start_new_session=True,
+        )
+        self._timeout = timeout
+        self._result: subprocess.CompletedProcess | None = None
+        self._error: BaseException | None = None
+        self._thread = threading.Thread(target=self._wait, daemon=True)
+        self._thread.start()
+        Background._started.append(self)
+
+    def _wait(self) -> None:
+        try:
+            out, err = self.proc.communicate(timeout=self._timeout)
+            self._result = subprocess.CompletedProcess(
+                self.proc.args, self.proc.returncode, out, err
+            )
+        except subprocess.TimeoutExpired as e:
+            self.kill()
+            self.proc.communicate()
+            self._error = e
+
+    def kill(self) -> None:
+        """SIGKILL the child's whole process group (a Spark child
+        leaves its JVM behind otherwise)."""
+        with contextlib.suppress(ProcessLookupError):
+            os.killpg(self.proc.pid, signal.SIGKILL)
+
+    def result(self) -> subprocess.CompletedProcess:
+        self._thread.join()
+        if self._error is not None:
+            raise self._error
+        return self._result
+
+
+def pytest_collection_modifyitems(items):
+    # Stable sort: module order is kept within both groups.
+    items.sort(
+        key=lambda item: bool(getattr(getattr(item, "module", None), "AWAITS_BACKGROUND", False))
+    )
+
+
+def pytest_sessionfinish(session, exitstatus):
+    for job in Background._started:
+        job.kill()

@@ -466,21 +466,21 @@ def test_concurrent_merge_retries_and_preserves_both_writes(spark, tmp_path):
     a = spark.createDataFrame(_rows(("A", "2024-01-01", 1.0, "2024-01-01T00:00:00")), SCHEMA)
     b = spark.createDataFrame(_rows(("B", "2024-01-02", 2.0, "2024-01-02T00:00:00")), SCHEMA)
 
-    # Interleave: t2 snapshots, then t1 commits, then t2 tries to commit.
-    orig_claim = ptmod.ParquetTable._claim_version
+    # Interleave: t2 stages its version, then t1 commits, then t2 publishes.
+    orig_publish = ptmod.ParquetTable._publish
     state = {"interposed": False}
 
-    def racing_claim(self, expected_version):
+    def racing_publish(self, stage, version):
         if self is t2 and not state["interposed"]:
             state["interposed"] = True
             t1.merge(a, keys=["k", "d"])  # concurrent writer wins first
-        return orig_claim(self, expected_version)
+        return orig_publish(self, stage, version)
 
-    ptmod.ParquetTable._claim_version = racing_claim
+    ptmod.ParquetTable._publish = racing_publish
     try:
         t2.merge(b, keys=["k", "d"])  # retries internally
     finally:
-        ptmod.ParquetTable._claim_version = orig_claim
+        ptmod.ParquetTable._publish = orig_publish
     got = sorted(r.k for r in t2.read().collect())
     assert got == ["A", "B"]
 
@@ -496,39 +496,80 @@ def test_conflict_without_retries_raises(spark, tmp_path):
     a = spark.createDataFrame(_rows(("A", "2024-01-01", 1.0, "2024-01-01T00:00:00")), SCHEMA)
     b = spark.createDataFrame(_rows(("B", "2024-01-02", 2.0, "2024-01-02T00:00:00")), SCHEMA)
 
-    orig_claim = ptmod.ParquetTable._claim_version
+    orig_publish = ptmod.ParquetTable._publish
     state = {"interposed": False}
 
-    def racing_claim(self, expected_version):
+    def racing_publish(self, stage, version):
         if self is t2 and not state["interposed"]:
             state["interposed"] = True
             t1.merge(a, keys=["k", "d"])
-        return orig_claim(self, expected_version)
+        return orig_publish(self, stage, version)
 
-    ptmod.ParquetTable._claim_version = racing_claim
+    ptmod.ParquetTable._publish = racing_publish
     try:
         with pytest.raises(ConcurrentWriteError):
             t2.merge(b, keys=["k", "d"], conflict_retries=0)
     finally:
-        ptmod.ParquetTable._claim_version = orig_claim
+        ptmod.ParquetTable._publish = orig_publish
 
 
-def test_version_claim_is_exclusive(spark, tmp_path):
-    """The O_CREAT|O_EXCL claim marker: a pre-existing claim for the
-    next version makes the commit fail instead of silently stacking a
-    second writer onto the same version number."""
+def _uncommitted(path):
+    """Staging (`.stage-*`) and trash (`.trash-*`) entries of a table."""
     import os
 
+    return [e for e in os.listdir(os.path.join(path, "_versions")) if e.startswith(".")]
+
+
+def test_published_version_is_never_replaced(spark, tmp_path, monkeypatch):
+    """The publishing rename is put-if-absent: when another writer has
+    published the next version number meanwhile, the commit fails
+    instead of replacing or stacking onto that version, and leaves no
+    staging dir behind."""
+    import os
+    import shutil
+
+    from pse_stocks_etl_spark.store import parquet_table as ptmod
     from pse_stocks_etl_spark.store.parquet_table import ConcurrentWriteError
 
-    path = str(tmp_path / "claim")
+    path = str(tmp_path / "put_if_absent")
     t = ParquetTable(spark, path, SCHEMA)
     t.init_empty()
     nxt = t.current_version() + 1
-    open(os.path.join(path, "_versions", f".claim_v{nxt:05d}"), "w").close()
+    orig_publish = ptmod.ParquetTable._publish
+
+    def rival_first(self, stage, version):
+        vdir = os.path.join(path, "_versions")
+        shutil.copytree(os.path.join(vdir, f"v{nxt - 1:05d}"), os.path.join(vdir, f"v{nxt:05d}"))
+        return orig_publish(self, stage, version)
+
+    monkeypatch.setattr(ptmod.ParquetTable, "_publish", rival_first)
     a = spark.createDataFrame(_rows(("A", "2024-01-01", 1.0, "2024-01-01T00:00:00")), SCHEMA)
     with pytest.raises(ConcurrentWriteError):
         t.overwrite(a)
+    assert t.history() == [nxt - 1, nxt]
+    assert t.read().count() == 0  # the rival's (empty) version, not ours
+    assert _uncommitted(path) == []
+
+
+def test_leftover_staging_dir_does_not_block_commit(spark, tmp_path):
+    """A writer killed before its publish leaves only a staging dir: it
+    never shows in history(), the next commit takes the next version
+    number, and vacuum reaps it once its base is no longer current."""
+    import os
+
+    path = str(tmp_path / "stage")
+    t = ParquetTable(spark, path, SCHEMA)
+    t.init_empty()
+    base = t.current_version()
+    orphan = os.path.join(path, "_versions", f".stage-{base:05d}-0123abcd")
+    os.makedirs(os.path.join(orphan, "_temporary"))
+    open(os.path.join(orphan, "part-00000.parquet"), "w").close()
+    a = spark.createDataFrame(_rows(("A", "2024-01-01", 1.0, "2024-01-01T00:00:00")), SCHEMA)
+    t.overwrite(a)
+    assert t.history() == [base, base + 1]
+    assert [r.k for r in t.read().collect()] == ["A"]
+    assert t.vacuum(retain_versions=2) == []
+    assert _uncommitted(path) == []
 
 
 def test_partitioned_merge_conflict_retry_preserves_both(spark, tmp_path):
@@ -551,20 +592,20 @@ def test_partitioned_merge_conflict_retry_preserves_both(spark, tmp_path):
     s2 = spark.createDataFrame(
         _rows(("B", "2024-01-02", 20.0, "2024-01-02T00:00:00")), PART_SCHEMA)
 
-    orig_claim = ptmod.ParquetTable._claim_version
+    orig_publish = ptmod.ParquetTable._publish
     state = {"interposed": False}
 
-    def racing_claim(self, expected_version):
+    def racing_publish(self, stage, version):
         if self is t2 and not state["interposed"]:
             state["interposed"] = True
             t1.merge(s1, keys=("k", "d"), freshness_col="extracted_at")
-        return orig_claim(self, expected_version)
+        return orig_publish(self, stage, version)
 
-    ptmod.ParquetTable._claim_version = racing_claim
+    ptmod.ParquetTable._publish = racing_publish
     try:
         t2.merge(s2, keys=("k", "d"), freshness_col="extracted_at")
     finally:
-        ptmod.ParquetTable._claim_version = orig_claim
+        ptmod.ParquetTable._publish = orig_publish
     got = {(r.k, str(r.d)): r.v for r in t2.read().collect()}
     assert got == {("A", "2024-01-01"): 10.0, ("B", "2024-01-02"): 20.0}
 
@@ -591,14 +632,126 @@ def test_restore_partitioned_version_with_hardlinked_dirs(spark, tmp_path):
     assert got == {("A", "2024-01-01"): 1.0, ("B", "2024-01-02"): 2.0}
 
 
+@pytest.mark.parametrize("op", ["delete", "optimize"])
+def test_rewrite_never_discards_a_concurrent_merge(spark, tmp_path, monkeypatch, op):
+    """delete(condition) and optimize rewrite the version they read: a
+    merge that commits between that read and the rewrite's commit makes
+    the rewrite fail with ConcurrentWriteError instead of silently
+    committing over (and so discarding) the merge's rows."""
+    from pse_stocks_etl_spark.store import parquet_table as ptmod
+    from pse_stocks_etl_spark.store.parquet_table import ConcurrentWriteError
+
+    path = str(tmp_path / "lost_update")
+    t1 = ParquetTable(spark, path, SCHEMA)
+    t1.overwrite(
+        spark.createDataFrame(
+            _rows(("A", "2024-01-01", 1.0, "2024-01-01T00:00:00"),
+                  ("B", "2024-01-02", 2.0, "2024-01-01T00:00:00")), SCHEMA)
+    )
+    t2 = ParquetTable(spark, path, SCHEMA)
+    c = spark.createDataFrame(_rows(("C", "2024-01-03", 3.0, "2024-01-03T00:00:00")), SCHEMA)
+    orig_commit = ptmod.ParquetTable._commit
+    state = {"interposed": False}
+
+    def racing_commit(self, *args, **kwargs):
+        if self is t2 and not state["interposed"]:
+            state["interposed"] = True
+            t1.merge(c, keys=["k", "d"])  # lands after t2's read
+        return orig_commit(self, *args, **kwargs)
+
+    monkeypatch.setattr(ptmod.ParquetTable, "_commit", racing_commit)
+    with pytest.raises(ConcurrentWriteError):
+        if op == "delete":
+            t2.delete(F.col("k") == "A")
+        else:
+            t2.optimize(cluster_by=["k"])
+    assert sorted(r.k for r in t1.read().collect()) == ["A", "B", "C"]
+
+
+def test_stale_publish_below_a_newer_version_is_withdrawn(spark, tmp_path, monkeypatch):
+    """A writer whose target version number was vacuumed while it wrote
+    can publish onto that free number, below the current version: the
+    publish is withdrawn (ConcurrentWriteError), so the current version
+    never moves backwards and the stale write never shows."""
+    from pse_stocks_etl_spark.store import parquet_table as ptmod
+    from pse_stocks_etl_spark.store.parquet_table import ConcurrentWriteError
+
+    path = str(tmp_path / "stale")
+    t1 = ParquetTable(spark, path, SCHEMA)
+    t1.overwrite(spark.createDataFrame(_rows(("A", "2024-01-01", 1.0, "2024-01-01T00:00:00")), SCHEMA))
+    t2 = ParquetTable(spark, path, SCHEMA)
+    orig_projection = ptmod.ParquetTable._guarded_projection
+    state = {"interposed": False}
+
+    def racing_projection(self, df):
+        if self is t2 and not state["interposed"]:  # t2 targets v2 by now
+            state["interposed"] = True
+            for k in "BC":
+                t1.merge(
+                    spark.createDataFrame(_rows((k, "2024-01-02", 2.0, "2024-01-02T00:00:00")), SCHEMA),
+                    keys=["k", "d"],
+                )
+            assert t1.vacuum(retain_versions=1) == ["v00001", "v00002"]
+        return orig_projection(self, df)
+
+    monkeypatch.setattr(ptmod.ParquetTable, "_guarded_projection", racing_projection)
+    stale = spark.createDataFrame(_rows(("Z", "2024-01-09", 9.0, "2024-01-09T00:00:00")), SCHEMA)
+    with pytest.raises(ConcurrentWriteError, match="older than the current"):
+        t2.overwrite(stale)
+    assert t1.history() == [3]
+    assert sorted(r.k for r in t1.read().collect()) == ["A", "B", "C"]
+    assert _uncommitted(path) == []
+
+
+def test_vacuum_killed_mid_delete_leaves_only_intact_versions(spark, tmp_path, monkeypatch):
+    """vacuum renames a version dir out of the version namespace before
+    deleting it: a vacuum killed halfway through deleting a version's
+    files leaves history() listing only intact versions, each reading
+    back its committed rows, and the next vacuum finishes the job."""
+    import os
+
+    from pse_stocks_etl_spark.store import parquet_table as ptmod
+
+    path = str(tmp_path / "vac")
+    t = ParquetTable(spark, path, SCHEMA)
+    for k in "ABC":
+        t.merge(
+            spark.createDataFrame(_rows((k, "2024-01-01", 1.0, "2024-01-01T00:00:00")), SCHEMA),
+            keys=["k", "d"],
+        )
+    committed = {v: sorted(r.k for r in t.read(version=v).collect()) for v in t.history()}
+    assert committed == {1: ["A"], 2: ["A", "B"], 3: ["A", "B", "C"]}
+
+    class Killed(BaseException):
+        pass
+
+    def killed_midway(root, *args, **kwargs):
+        for dirpath, _, files in os.walk(root):
+            for fn in files:
+                if fn.endswith(".parquet"):
+                    os.remove(os.path.join(dirpath, fn))
+        raise Killed
+
+    with monkeypatch.context() as m:
+        m.setattr(ptmod.shutil, "rmtree", killed_midway)
+        with pytest.raises(Killed):
+            t.vacuum(retain_versions=1)
+    for v in t.history():
+        assert sorted(r.k for r in t.read(version=v).collect()) == committed[v]
+    assert t.history()[-1] == 3
+    t.vacuum(retain_versions=1)
+    assert t.history() == [3]
+    assert _uncommitted(path) == []
+
+
 # ------------------------------------------- fused CHECK / append-only --
 @pytest.mark.parametrize("how", ["overwrite", "merge_existing", "merge_new"])
 def test_check_violation_leaves_no_version_behind(spark, tmp_path, how):
     """The CHECK constraint runs inside the write job: a violating batch
-    raises ValueError, and the claimed version dir and claim marker are
-    removed, so the table, its history and the next version number are
-    exactly as before — through overwrite, the pruned merge of an
-    existing partition, and the append-only merge into new ones."""
+    raises ValueError, and its staging dir is removed, so the table, its
+    history and the next version number are exactly as before — through
+    overwrite, the pruned merge of an existing partition, and the
+    append-only merge into new ones."""
     import os
 
     t = ParquetTable(
@@ -626,7 +779,7 @@ def test_check_violation_leaves_no_version_behind(spark, tmp_path, how):
     assert sorted(map(tuple, t.read().collect())) == before
     vdir = os.path.join(t.path, "_versions")
     assert not os.path.exists(os.path.join(vdir, nxt))
-    assert not os.path.exists(os.path.join(vdir, f".claim_{nxt}"))
+    assert _uncommitted(t.path) == []
     ok = spark.createDataFrame(
         _rows(("C", "2024-01-03", 3.0, "2024-01-03T00:00:00")), PART_SCHEMA)
     t.merge(ok, keys=("k", "d"), freshness_col="extracted_at")

@@ -9,6 +9,8 @@ which is where versioned stores actually break."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from hypothesis import HealthCheck, settings
 from hypothesis import strategies as st
@@ -38,6 +40,10 @@ rows_strategy = st.lists(
     max_size=4,
     unique_by=lambda r: r[0],  # unique keys per batch: merge input contract
 )
+
+
+class _Crash(BaseException):
+    """A writer dying mid-commit: not an Exception, so no cleanup runs."""
 
 
 class StoreMachine(RuleBasedStateMachine):
@@ -90,6 +96,34 @@ class StoreMachine(RuleBasedStateMachine):
         self.model = {}
         self._commit_model()
 
+    @rule(
+        rows=rows_strategy.filter(bool),
+        op=st.sampled_from(["overwrite", "merge"]),
+        step=st.sampled_from(["before_schema", "after_schema", "before_publish"]),
+    )
+    def crash_commit(self, rows, op, step):
+        # The writer dies after its data write, after the schema
+        # snapshot, or just before the publishing rename: the table,
+        # and so the model, must be unchanged.
+        method = "_publish" if step == "before_publish" else "_write_version_schema"
+        real = getattr(self.table, method)
+
+        def crash(*args):
+            if step == "after_schema":
+                real(*args)
+            raise _Crash(step)
+
+        setattr(self.table, method, crash)
+        try:
+            with pytest.raises(_Crash):
+                df = self.spark.createDataFrame(rows, SCHEMA)
+                if op == "overwrite":
+                    self.table.overwrite(df)
+                else:
+                    self.table.merge(df, keys=["k"])
+        finally:
+            delattr(self.table, method)
+
     @rule(retain=st.integers(min_value=1, max_value=3))
     def vacuum(self, retain):
         self.table.vacuum(retain_versions=retain)
@@ -97,6 +131,11 @@ class StoreMachine(RuleBasedStateMachine):
         # the invariant only visits versions the table still retains, and
         # restore only picks from history() — so vacuum needs no model
         # mutation beyond what the table itself reports.
+        # Only a staging dir derived from the current version (a writer
+        # that might still publish) survives a vacuum.
+        cur = self.table.current_version()
+        left = [e for e in os.listdir(os.path.join(self.root, "_versions")) if e.startswith(".")]
+        assert all(e.startswith(f".stage-{cur:05d}-") for e in left), left
 
     @rule(pick=st.integers(min_value=0, max_value=10_000))
     def restore(self, pick):
