@@ -21,7 +21,8 @@ Layout:
     operators/    Relational operators (dedup, watermark, merge, topk...).
     sources/      Scans + the (stubbed) PSE Edge connector.
     functions/    Column-expression libraries (datetime, text, vectors).
-    plans/        The queries()/oracle_sql() registry + sync planner.
+    plans/        The sync planner (plans/sync.py) + the queries()/oracle_sql()
+                  registry, whose query modules load on first use.
     streaming/    Structured Streaming incremental ingestion.
     store/        Parquet-backed table with merge/overwrite/delete.
 """

@@ -1,116 +1,42 @@
-"""Query plans: importing this package populates the registry."""
+"""Query plans: the queries()/oracle_sql() registry and the sync planner.
 
-from . import core_queries  # noqa: F401
-from .registry import REGISTRY, oracle_sql, queries  # noqa: F401
+Importing this package imports no query module, so `plans.sync` (the
+CLI's and perfbench's entry point) stays free of the query modules. The
+registry fills on first use of `REGISTRY`, `queries()` or
+`oracle_sql()`: every module in `_QUERY_MODULES` is imported then, in
+order, and one that fails to import raises.
+"""
 
-try:  # LLM-data-pipeline extension queries (documents / embeddings tables)
-    from . import llm_queries  # noqa: F401
-except ImportError:  # pragma: no cover - partial checkouts
-    pass
+import importlib
+import threading
 
-try:  # pipeline queries (multimodal / streaming / stateful / sync engine)
-    from . import pipeline_queries  # noqa: F401
-except ImportError:  # pragma: no cover - partial checkouts
-    pass
+from . import registry
 
-try:  # extension queries (as-of join, approx/percentile aggs, windows)
-    from . import ext_queries  # noqa: F401
-except ImportError:  # pragma: no cover - partial checkouts
-    pass
-
-try:  # corpus-prep queries (repetition, contamination, packing, TF-IDF)
-    from . import corpus_queries  # noqa: F401
-except ImportError:  # pragma: no cover - partial checkouts
-    pass
-
-try:  # store-path queries (Z-order, rollup roundtrip, CDF preview)
-    from . import store_queries  # noqa: F401
-except ImportError:  # pragma: no cover - partial checkouts
-    pass
-
-try:  # round-6 queries (runtime filters, ER, baskets, expectations)
-    from . import round6_queries  # noqa: F401
-except ImportError:  # pragma: no cover - partial checkouts
-    pass
-
-try:  # round-7 queries (islands, sweep-line, attribution, MAD, Benford)
-    from . import round7_queries  # noqa: F401
-except ImportError:  # pragma: no cover - partial checkouts
-    pass
-
-try:  # round-8 queries (TPC-H Q14/Q18/Q7 shapes, span/bow/containment dedup)
-    from . import round8_queries  # noqa: F401
-except ImportError:  # pragma: no cover - partial checkouts
-    pass
-
-try:  # round-9 queries (TPC-H subquery shapes, IVF-PQ, PCA, SimHash pairs)
-    from . import round9_queries  # noqa: F401
-except ImportError:  # pragma: no cover - partial checkouts
-    pass
-
-try:  # round-10 queries (store lifecycle, incremental IVF-PQ)
-    from . import round10_queries  # noqa: F401
-except ImportError:  # pragma: no cover - partial checkouts
-    pass
-
-try:  # round-11 queries (TPC-H sweep completion: Q2/Q12/Q20 analogs)
-    from . import round11_queries  # noqa: F401
-except ImportError:  # pragma: no cover - partial checkouts
-    pass
-
-try:  # round-12 queries (C4 line dedup w/ reassembly, semi stream join)
-    from . import round12_queries  # noqa: F401
-except ImportError:  # pragma: no cover - partial checkouts
-    pass
-
-try:  # round-13 queries (MV incremental refresh, k-hop BFS, k-anonymity)
-    from . import round13_queries  # noqa: F401
-except ImportError:  # pragma: no cover - partial checkouts
-    pass
-
-try:  # round-14 queries (baseline JPEG codec — r7 VERDICT item 5)
-    from . import round14_queries  # noqa: F401
-except ImportError:  # pragma: no cover - partial checkouts
-    pass
-
-try:  # round-15 queries (GIF/LZW codec, BM25, RRF hybrid retrieval)
-    from . import round15_queries  # noqa: F401
-except ImportError:  # pragma: no cover - partial checkouts
-    pass
-
-try:  # round-16 queries (MP4 container, URL canonicalization lane,
-    # end-to-end corpus build, incremental contamination)
-    from . import round16_queries  # noqa: F401
-except ImportError:  # pragma: no cover - partial checkouts
-    pass
-
-try:  # round-17 queries (exact substring dedup, BPE training)
-    from . import round17_queries  # noqa: F401
-except ImportError:  # pragma: no cover - partial checkouts
-    pass
-
-try:  # round-18 queries (mixture planning/sampling, quantile sketch)
-    from . import round18_queries  # noqa: F401
-except ImportError:  # pragma: no cover - partial checkouts
-    pass
-
-try:  # round-19 queries (sketch/index error audits, mixture reweight)
-    from . import round19_queries  # noqa: F401
-except ImportError:  # pragma: no cover - partial checkouts
-    pass
-
-try:  # round-20 queries (IVF cell split, incremental corpus build)
-    from . import round20_queries  # noqa: F401
-except ImportError:  # pragma: no cover - partial checkouts
-    # The late-bind oracles guard their own REGISTRY preconditions and
-    # early-return on partial checkouts; an unexpected KeyError (typo,
-    # renamed key) now raises loudly instead of being swallowed here.
-    pass
-
-try:  # round-21 queries (store-backed incremental corpus admission)
-    from . import round21_queries  # noqa: F401
-except ImportError:  # pragma: no cover - partial checkouts
-    pass
+# Modules that register queries, in registry order (after _DRIVER_FIRST).
+_QUERY_MODULES = (
+    "core_queries",
+    "llm_queries",  # documents / embeddings tables
+    "pipeline_queries",  # multimodal / streaming / stateful / sync engine
+    "ext_queries",  # as-of join, approx/percentile aggs, windows
+    "corpus_queries",  # repetition, contamination, packing, TF-IDF
+    "store_queries",  # Z-order, rollup roundtrip, CDF preview
+    "round6_queries",  # runtime filters, ER, baskets, expectations
+    "round7_queries",  # islands, sweep-line, attribution, MAD, Benford
+    "round8_queries",  # TPC-H Q14/Q18/Q7 shapes, span/bow/containment dedup
+    "round9_queries",  # TPC-H subquery shapes, IVF-PQ, PCA, SimHash pairs
+    "round10_queries",  # store lifecycle, incremental IVF-PQ
+    "round11_queries",  # TPC-H sweep completion: Q2/Q12/Q20 analogs
+    "round12_queries",  # C4 line dedup w/ reassembly, semi stream join
+    "round13_queries",  # MV incremental refresh, k-hop BFS, k-anonymity
+    "round14_queries",  # baseline JPEG codec
+    "round15_queries",  # GIF/LZW codec, BM25, RRF hybrid retrieval
+    "round16_queries",  # MP4 container, URL canonicalization, corpus build
+    "round17_queries",  # exact substring dedup, BPE training
+    "round18_queries",  # mixture planning/sampling, quantile sketch
+    "round19_queries",  # sketch/index error audits, mixture reweight
+    "round20_queries",  # IVF cell split, incremental corpus build
+    "round21_queries",  # store-backed incremental corpus admission
+)
 
 # ---------------------------------------------------------------------------
 # Driver-verification rotation.
@@ -202,11 +128,45 @@ _DRIVER_FIRST = [
 
 
 def _reorder_registry() -> None:
-    """Re-key REGISTRY so driver-priority queries iterate first."""
-    ordered = {n: REGISTRY.pop(n) for n in _DRIVER_FIRST if n in REGISTRY}
-    ordered.update(REGISTRY)
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
+    """Re-key REGISTRY canonically: _DRIVER_FIRST, then the rest by the
+    position of the registering module in _QUERY_MODULES, keeping each
+    module's registration order. The result does not depend on which
+    module was imported first."""
+    reg = registry.REGISTRY
+    rank = {f"{__name__}.{m}": i for i, m in enumerate(_QUERY_MODULES)}
+    first = {n: reg[n] for n in _DRIVER_FIRST if n in reg}
+    rest = sorted((n for n in reg if n not in first), key=lambda n: rank[reg[n].fn.__module__])
+    ordered = {**first, **{n: reg[n] for n in rest}}
+    reg.clear()
+    reg.update(ordered)
 
 
-_reorder_registry()
+_LOAD_LOCK = threading.RLock()
+
+
+def _loaded() -> dict[str, registry.Query]:
+    """Import every query module (once) and return the ordered REGISTRY.
+    Locked: a second thread must not see the dict mid-reorder. Once
+    loaded, `REGISTRY` is a plain module attribute."""
+    global REGISTRY
+    with _LOAD_LOCK:
+        if "REGISTRY" not in globals():
+            for m in _QUERY_MODULES:
+                importlib.import_module(f"{__name__}.{m}")
+            _reorder_registry()
+            REGISTRY = registry.REGISTRY
+    return registry.REGISTRY
+
+
+def __getattr__(name: str):
+    if name == "REGISTRY":
+        return _loaded()
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+
+
+def queries() -> dict[str, registry.QueryFn]:
+    return {name: q.fn for name, q in _loaded().items()}
+
+
+def oracle_sql() -> dict[str, str]:
+    return {name: q.oracle for name, q in _loaded().items() if q.oracle is not None}

@@ -395,7 +395,10 @@ class _PersistedLRU:
     locked. build()/cleanup run OUTSIDE the lock, so a build that
     fills another cache, or a cleanup that evicts a derived entry
     from another cache, can never deadlock two caches against each
-    other."""
+    other. evict()/clear() mark the in-flight builds of the keys they
+    hit stale; a stale build is released and rebuilt, never inserted,
+    so a frame built over a parent freed mid-build cannot outlive that
+    parent in the cache."""
 
     def __init__(self, cap: int):
         import threading
@@ -406,6 +409,7 @@ class _PersistedLRU:
         self._cleanups: dict = {}
         self._lock = threading.Lock()
         self._inflight: dict = {}
+        self._stale: set = set()  # in-flight keys evicted/cleared mid-build
 
     def _release(self, key, df, cleanup) -> None:
         try:
@@ -437,28 +441,39 @@ class _PersistedLRU:
                 ev = self._inflight.get(key)
                 if ev is None:
                     self._inflight[key] = threading.Event()
-                    break
-            ev.wait()  # another thread is building this key — reuse it
-        try:
-            df = build()
-        except BaseException:
+            if ev is not None:
+                ev.wait()  # another thread is building this key — reuse it
+                continue
+            try:
+                df = build()
+            except BaseException:
+                with self._lock:
+                    self._stale.discard(key)
+                    self._inflight.pop(key).set()
+                raise
             with self._lock:
+                current = key not in self._stale
+                self._stale.discard(key)
+                evicted = []
+                if current:
+                    self._entries[key] = df
+                    if cleanup is not None:
+                        self._cleanups[key] = cleanup
+                    evicted = self._pop_release_list()
                 self._inflight.pop(key).set()
-            raise
-        with self._lock:
-            self._entries[key] = df
-            if cleanup is not None:
-                self._cleanups[key] = cleanup
-            evicted = self._pop_release_list()
-            self._inflight.pop(key).set()
-        for k, e, cl in evicted:
-            self._release(k, e, cl)
-        return df
+            if not current:  # evicted or cleared mid-build: release, rebuild
+                self._release(key, df, cleanup)
+                continue
+            for k, e, cl in evicted:
+                self._release(k, e, cl)
+            return df
 
     def evict(self, key) -> None:
         """Drop + release one entry if present (parent caches evict
         their derived entries through this)."""
         with self._lock:
+            if key in self._inflight:
+                self._stale.add(key)
             df = self._entries.pop(key, None)
             cleanup = self._cleanups.pop(key, None)
         if df is not None:
@@ -471,6 +486,8 @@ class _PersistedLRU:
         """Unpersist and drop every entry (memo dict AND storage
         together — unpersisting behind the dict's back leaves stale
         handles that silently recompute un-persisted forever)."""
+        with self._lock:
+            self._stale.update(self._inflight)
         while True:
             with self._lock:
                 if not self._entries:

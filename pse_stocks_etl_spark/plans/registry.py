@@ -1,10 +1,10 @@
 """Query registry: every implemented operator from SURVEY.md §2 is a
 (name → Spark plan builder, DuckDB oracle SQL) pair.
 
-The driver contract (__spark_entry__.py) exposes exactly this registry:
-`queries()[name](spark, sf_dir) -> DataFrame` and `oracle_sql()[name]`
-as ANSI SQL over the same parquet tables. Non-SQL-expressible ops
-register with `oracle=None` (rows-only check).
+The driver contract (__spark_entry__.py) exposes exactly this registry
+through `plans.queries()[name](spark, sf_dir) -> DataFrame` and
+`plans.oracle_sql()[name]` as ANSI SQL over the same parquet tables.
+Non-SQL-expressible ops register with `oracle=None` (rows-only check).
 """
 
 from __future__ import annotations
@@ -55,10 +55,3 @@ def register(
 
     return deco
 
-
-def queries() -> dict[str, QueryFn]:
-    return {name: q.fn for name, q in REGISTRY.items()}
-
-
-def oracle_sql() -> dict[str, str]:
-    return {name: q.oracle for name, q in REGISTRY.items() if q.oracle is not None}

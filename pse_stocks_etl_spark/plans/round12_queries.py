@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import portable_hash64
 from ..sources.catalog import load_table
+from . import round9_queries  # noqa: F401 (register the entries read below)
 from .registry import register
 
 

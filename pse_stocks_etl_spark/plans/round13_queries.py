@@ -496,8 +496,11 @@ def _sql_cuped() -> str:
     theta AS (
       SELECT n,
              CAST(sx AS DOUBLE) / n AS xbar,
-             (CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * sy / n)
-               / (CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * sx / n) AS th
+             CASE WHEN CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * sx / n = 0
+                  THEN 0.0
+                  ELSE (CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * sy / n)
+                       / (CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * sx / n)
+             END AS th
       FROM mom
     ),
     var_agg AS (
@@ -525,9 +528,12 @@ def variant_cuped_adjusted(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-period means adjusted by the pre-period covariate —
     adj_i = y_i - θ·(x_i - x̄) with θ = cov(x,y)/var(x) pooled across
     variants — the standard variance-reduction step before an A/B
-    verdict. Per-user pre/post sums are exact integer cents; θ, x̄ and
-    the adjusted means materialize as doubles through expressions
-    token-identical to the oracle's, so the hash is bit-exact.
+    verdict. θ = 0 when var(x) = 0 (every user's pre-period sum equal):
+    x_i - x̄ is then 0 for everyone, so the adjusted mean is the plain
+    post-period mean. Per-user pre/post sums are exact integer cents;
+    θ, x̄ and the adjusted means materialize as doubles through
+    expressions token-identical to the oracle's, so the hash is
+    bit-exact.
 
     Scale: one conditional aggregate per user (single shuffle on
     user_id, map-side combinable), a 5-long-column global moment
@@ -553,13 +559,13 @@ def variant_cuped_adjusted(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("x") * F.col("y")).alias("sxy"),
     )
     sx, sy = F.col("sx").cast("double"), F.col("sy")
+    var_x = F.col("sxx").cast("double") - sx * F.col("sx") / F.col("n")
     theta = mom.select(
         "n",
         (sx / F.col("n")).alias("xbar"),
-        (
-            (F.col("sxy").cast("double") - sx * sy / F.col("n"))
-            / (F.col("sxx").cast("double") - sx * F.col("sx") / F.col("n"))
-        ).alias("th"),
+        F.when(var_x == 0, F.lit(0.0))
+        .otherwise((F.col("sxy").cast("double") - sx * sy / F.col("n")) / var_x)
+        .alias("th"),
     )
     var_agg = per_user.groupBy((F.col("user_id") % 2).alias("variant")).agg(
         F.count("*").alias("n_users"),

@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import portable_hash64, sql_portable_hash64, tokens
 from ..sources.catalog import load_table
+from . import llm_queries  # noqa: F401 (register the entries read below)
 from .registry import register
 from .round8_queries import _grams_all, _sql_grams_all, _SQL_TOKS
 

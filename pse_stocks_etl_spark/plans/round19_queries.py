@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
+from . import llm_queries, round17_queries  # noqa: F401 (register the entries read below)
 from .registry import register
 from .round18_queries import PPM, _mixture_plan_frame, _sql_lm_perdoc_cte, _sql_mixture_plan_cte
 
@@ -581,12 +582,6 @@ def docs_dedup_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _late_bind_consensus_oracle() -> None:
     from .registry import REGISTRY
 
-    needed = ("docs_minhash_lsh_pairs", "docs_substring_dedup", "docs_semdedup")
-    if any(k not in REGISTRY for k in needed):  # pragma: no cover - partial
-        # checkout: a stage module (llm/round17/round18) failed to import, so
-        # its REGISTRY entry is absent. Skip binding rather than break the
-        # package import; an unexpected KeyError still raises loudly.
-        return
     minhash_sql = REGISTRY["docs_minhash_lsh_pairs"].oracle
     substring_sql = REGISTRY["docs_substring_dedup"].oracle
     semdedup_sql = REGISTRY["docs_semdedup"].oracle

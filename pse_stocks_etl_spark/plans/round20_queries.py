@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine
+from . import corpus_queries, llm_queries, round16_queries  # noqa: F401 (register the entries read below)
 from .registry import register
 
 # --------------------------------------------------------------------------
@@ -386,11 +387,6 @@ def _late_bind_qtrain_oracles() -> None:
     from ..functions.text import sql_tokens
     from .registry import REGISTRY
 
-    if "docs_pipeline_keep" not in REGISTRY:  # pragma: no cover - partial
-        # checkout without the corpus_queries pipeline module: skip binding
-        # rather than break the package import. Any OTHER KeyError (a typo,
-        # a renamed key) must still raise loudly at import time.
-        return
     keep = REGISTRY["docs_pipeline_keep"].oracle
     feat_weights = f"""
     labels AS (
@@ -1173,9 +1169,6 @@ def _late_bind_epoch_shuffle_oracle() -> None:
     from ..functions.text import sql_portable_hash64
     from .registry import REGISTRY
 
-    if "corpus_shard_manifest" not in REGISTRY:  # pragma: no cover - partial
-        # checkout without round16: skip binding; unexpected KeyErrors raise.
-        return
     manifest = REGISTRY["corpus_shard_manifest"].oracle
     h = sql_portable_hash64(
         "'shuf' || ':' || CAST(epoch AS VARCHAR) || ':' || split || ':' "

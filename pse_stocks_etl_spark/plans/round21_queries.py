@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..store.parquet_table import ParquetTable
+from . import corpus_queries, round16_queries, round20_queries  # noqa: F401 (register the entries read below)
 from .registry import register
 
 # --------------------------------------------------------------------------
@@ -566,8 +567,6 @@ def _late_bind_store_increment_oracle() -> None:
     from .registry import REGISTRY
     from .round16_queries import _sql_corpus_build
 
-    if "corpus_build_increment_store" not in REGISTRY:  # pragma: no cover
-        return
     # Same proof as corpus_build_increment: the oracle is the
     # FULL-REBUILD SQL, so hash equality shows store-backed admission
     # lands byte-identically where a rebuild would.
@@ -885,8 +884,6 @@ def _late_bind_split_iterate_oracle() -> None:
     from .round18_queries import _sql_semdedup_member_cte
     from .round20_queries import SPLIT_QUANT
 
-    if "emb_ivf_split_iterate" not in REGISTRY:  # pragma: no cover
-        return
     REGISTRY["emb_ivf_split_iterate"].oracle = f"""
     WITH {_sql_semdedup_member_cte()},
     m0 AS (SELECT vec_id, cell, CAST(cell AS VARCHAR) AS ck FROM member),
@@ -1001,15 +998,6 @@ def corpus_epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _late_bind_epoch_plan_oracle() -> None:
     from .registry import REGISTRY
 
-    needed = (
-        "corpus_epoch_plan",
-        "corpus_epoch_shuffle",
-        "corpus_shard_manifest",
-        "docs_epoch_cap_redistribute",
-    )
-    if any(k not in REGISTRY for k in needed):  # pragma: no cover - partial
-        # checkout: skip binding; unexpected KeyErrors raise loudly.
-        return
     shuffle = REGISTRY["corpus_epoch_shuffle"].oracle
     manifest = REGISTRY["corpus_shard_manifest"].oracle
     cap = REGISTRY["docs_epoch_cap_redistribute"].oracle
@@ -1368,10 +1356,6 @@ def _late_bind_build_quality_oracle() -> None:
     from .registry import REGISTRY
     from ..functions.text import sql_portable_hash64, sql_token_count
 
-    needed = ("corpus_build_quality", "docs_pipeline_keep", "docs_quality_train_score")
-    if any(k not in REGISTRY for k in needed):  # pragma: no cover - partial
-        # checkout: skip binding; unexpected KeyErrors raise loudly.
-        return
     keep = REGISTRY["docs_pipeline_keep"].oracle
     score = REGISTRY["docs_quality_train_score"].oracle
     h = sql_portable_hash64("'split:' || CAST(d.doc_id AS VARCHAR)")
@@ -1451,9 +1435,6 @@ def corpus_resume_cursor(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _late_bind_resume_oracle() -> None:
     from .registry import REGISTRY
 
-    needed = ("corpus_resume_cursor", "corpus_epoch_plan")
-    if any(k not in REGISTRY for k in needed):  # pragma: no cover - partial
-        return
     plan = REGISTRY["corpus_epoch_plan"].oracle
     REGISTRY["corpus_resume_cursor"].oracle = f"""
     SELECT epoch, source, chunk_no, shuffle_pos, take_tokens, cursor_pos
@@ -1552,8 +1533,6 @@ def _late_bind_crossdoc_oracle() -> None:
     from .round17_queries import SUB_L
     from .round18_queries import PPM
 
-    if "docs_crossdoc_dup_rate" not in REGISTRY:  # pragma: no cover - partial
-        return
     REGISTRY["docs_crossdoc_dup_rate"].oracle = f"""
     WITH toks AS (
       SELECT doc_id, {_SQL_TOKS} AS tk FROM documents WHERE text IS NOT NULL
@@ -1659,8 +1638,6 @@ def _late_bind_dsir_increment_oracle() -> None:
     from .round8_queries import _SQL_TOKS
     from .round18_queries import PPM, _muldiv
 
-    if "docs_dsir_increment" not in REGISTRY:  # pragma: no cover - partial
-        return
     srcs = ", ".join(f"'{s}'" for s in DSIR_TARGET_SOURCES)
     g = sql_portable_hash64("'dsir|' || w")
     hsel = sql_portable_hash64("'dsirsel|' || CAST(doc_id AS VARCHAR)")
@@ -1796,8 +1773,6 @@ def _late_bind_ccnet_oracle() -> None:
     from .registry import REGISTRY
     from .round18_queries import _sql_lm_perdoc_cte
 
-    if "docs_ccnet_buckets" not in REGISTRY:  # pragma: no cover - partial
-        return
     REGISTRY["docs_ccnet_buckets"].oracle = f"""
     WITH {_sql_lm_perdoc_cte()},
     ranked AS (
@@ -1930,8 +1905,6 @@ def _late_bind_pack_nosplit_oracle() -> None:
     from .llm_queries import SPLIT_TEST_PCT, SPLIT_VAL_PCT
     from .registry import REGISTRY
 
-    if "corpus_pack_nosplit" not in REGISTRY:  # pragma: no cover - partial
-        return
     h = sql_portable_hash64("'split:' || CAST(doc_id AS VARCHAR)")
     REGISTRY["corpus_pack_nosplit"].oracle = f"""
     WITH meta AS (
@@ -2039,9 +2012,6 @@ def _late_bind_pack_efficiency_oracle() -> None:
     from .corpus_queries import PACK_CAPACITY
     from .registry import REGISTRY
 
-    needed = ("corpus_pack_efficiency", "corpus_pack_nosplit")
-    if any(k not in REGISTRY for k in needed):  # pragma: no cover - partial
-        return
     per = REGISTRY["corpus_pack_nosplit"].oracle
     REGISTRY["corpus_pack_efficiency"].oracle = f"""
     WITH per AS ({per}),

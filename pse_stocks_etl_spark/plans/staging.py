@@ -14,8 +14,9 @@ not exposed to the driver yet, so they cannot silently inflate the
 unverified backlog.
 
 Promotion recipe (next round, after CORRECTNESS_r05 drains the queue):
-move the `stage(...)` decorators to `register(...)`, import the module
-in plans/__init__, and append the names to the _DRIVER_FIRST queue.
+move the `stage(...)` decorators to `register(...)`, add the module to
+`_QUERY_MODULES` in plans/__init__, and append the names to the
+_DRIVER_FIRST queue.
 tests/test_staging.py::test_staging_drains_when_backlog_has_room turns
 red if staged queries linger while the backlog has room — staging is a
 queue, not a parking lot.

@@ -3,6 +3,10 @@ their exact baselines (the kind of check the oracle harness can't do)."""
 
 from __future__ import annotations
 
+import threading
+
+import pytest
+
 from pse_stocks_etl_spark import plans
 
 
@@ -240,6 +244,112 @@ def test_persisted_lru_cleanup_hook_runs_on_evict_and_clear():
     assert len(lru) == 0
     # evict() on a missing key is a no-op
     lru.evict("nope")
+
+
+@pytest.mark.parametrize("drop", ["clear", "evict"])
+def test_persisted_lru_releases_a_build_racing_evict_or_clear(drop):
+    """A build in flight while evict(key) or clear() runs must not land
+    in the cache afterwards: its frame may sit over a parent that the
+    evict/clear just freed. The stale frame is released (unpersist +
+    cleanup) and the caller gets, and the cache keeps, a fresh build."""
+    from pse_stocks_etl_spark.plans.llm_queries import _PersistedLRU
+
+    class Frame:
+        def __init__(self):
+            self.unpersists = 0
+
+        def unpersist(self):
+            self.unpersists += 1
+
+    lru = _PersistedLRU(cap=2)
+    started, resume = threading.Event(), threading.Event()
+    frames: list = []
+    cleaned: list = []
+
+    def build():
+        frames.append(Frame())
+        if len(frames) == 1:  # only the first build blocks mid-flight
+            started.set()
+            assert resume.wait(10)
+        return frames[-1]
+
+    got: list = []
+    t = threading.Thread(
+        target=lambda: got.append(lru.get_or_build("k", build, cleanup=cleaned.append))
+    )
+    t.start()
+    assert started.wait(10)
+    if drop == "clear":
+        lru.clear()
+    else:
+        lru.evict("k")
+    resume.set()
+    t.join(10)
+    assert not t.is_alive()
+    assert len(frames) == 2, "the stale build was inserted instead of rebuilt"
+    stale, fresh = frames
+    assert got == [fresh]
+    assert stale.unpersists == 1 and cleaned == [stale]
+    assert fresh.unpersists == 0
+    assert lru.get_or_build("k", lambda: None) is fresh
+    lru.clear()
+    assert len(lru) == 0 and fresh.unpersists == 1
+
+
+def test_persisted_lru_stress_releases_every_frame_exactly_once():
+    """8 threads on 4 cores race get_or_build, evict and clear over three
+    keys with a short switch interval. No frame may be released twice,
+    and after a final clear() every frame ever built is released once:
+    a stale build dropped without release, or inserted over another
+    entry, leaves a frame at 0."""
+    import random
+    import sys
+
+    from pse_stocks_etl_spark.plans.llm_queries import _PersistedLRU
+
+    class Frame:
+        def __init__(self):
+            self.unpersists = 0
+
+        def unpersist(self):
+            self.unpersists += 1
+
+    lru = _PersistedLRU(cap=2)
+    built: list = []
+    lock = threading.Lock()
+
+    def build():
+        f = Frame()
+        with lock:
+            built.append(f)
+        return f
+
+    def worker(seed):
+        rnd = random.Random(seed)
+        for _ in range(300):
+            key = rnd.choice("abc")
+            op = rnd.random()
+            if op < 0.7:
+                lru.get_or_build(key, build)
+            elif op < 0.9:
+                lru.evict(key)
+            else:
+                lru.clear()
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    lru.clear()
+    assert len(lru) == 0
+    assert built and all(f.unpersists == 1 for f in built)
 
 
 def test_feat_cache_clear_frees_checkpoint_rdd_blocks(spark, sf_dir):

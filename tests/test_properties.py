@@ -139,7 +139,7 @@ def test_pack_chunks_invariants(spark, tmp_path_factory, docs):
     are exactly the integer spans the offsets dictate; every doc spans
     >= 1 chunk."""
     from pse_stocks_etl_spark.plans.corpus_queries import PACK_CAPACITY
-    from pse_stocks_etl_spark.plans.registry import REGISTRY
+    from pse_stocks_etl_spark.plans import REGISTRY
 
     tmp = tmp_path_factory.mktemp("pack")
     df = spark.createDataFrame(
@@ -339,7 +339,7 @@ def _events_df(spark, tmp, rows):
 def test_islands_match_python_model(spark, tmp_path_factory, rows):
     """Gaps-and-islands vs a pure-python streak model on random
     (user, day) activity patterns."""
-    from pse_stocks_etl_spark.plans.registry import REGISTRY
+    from pse_stocks_etl_spark.plans import REGISTRY
 
     tmp = tmp_path_factory.mktemp("isl")
     got = {
@@ -376,7 +376,7 @@ def test_debounce_matches_python_model(spark, tmp_path_factory, rows):
     order — is more than 5s older. Hour-granularity inputs make every
     nonzero gap > 5s, so suppressions are exactly the duplicate
     (user, ts) slots, which the model counts directly."""
-    from pse_stocks_etl_spark.plans.registry import REGISTRY
+    from pse_stocks_etl_spark.plans import REGISTRY
 
     tmp = tmp_path_factory.mktemp("deb")
     out = (
@@ -420,7 +420,7 @@ _ks_strategy = st.tuples(
 def test_ks_matches_python_model(spark, tmp_path_factory, vals):
     """Two-sample KS vs the direct python supremum over the pooled
     distinct values."""
-    from pse_stocks_etl_spark.plans.registry import REGISTRY
+    from pse_stocks_etl_spark.plans import REGISTRY
 
     clicks, purchases = vals
     base = dt.datetime(2024, 1, 1)

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from pse_stocks_etl_spark.plans.registry import REGISTRY
+from pse_stocks_etl_spark.plans import REGISTRY
 from pse_stocks_etl_spark.plans import round10_queries  # noqa: F401
 
 from conftest import SF_DIR

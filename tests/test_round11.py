@@ -9,7 +9,7 @@ from __future__ import annotations
 import re
 
 from pse_stocks_etl_spark.plans import round11_queries  # noqa: F401
-from pse_stocks_etl_spark.plans.registry import REGISTRY
+from pse_stocks_etl_spark.plans import REGISTRY
 
 from conftest import SF_DIR
 

@@ -24,7 +24,7 @@ from pse_stocks_etl_spark.plans.round11_queries import (
     dominant_part_suppliers,
     min_cost_regional_supplier,
 )
-from pse_stocks_etl_spark.plans.registry import REGISTRY
+from pse_stocks_etl_spark.plans import REGISTRY
 
 _HYP = dict(
     max_examples=5,

@@ -15,7 +15,7 @@ import uuid
 from pyspark.sql import functions as F
 
 from pse_stocks_etl_spark.plans import round12_queries
-from pse_stocks_etl_spark.plans.registry import REGISTRY
+from pse_stocks_etl_spark.plans import REGISTRY
 
 from conftest import SF_DIR
 

@@ -13,7 +13,7 @@ from collections import defaultdict
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -24,7 +24,7 @@ from pse_stocks_etl_spark.plans.round13_queries import (
     _MV_PRICE_BUMP_CENTS,
     _MV_QTY_BUMP,
 )
-from pse_stocks_etl_spark.plans.registry import REGISTRY
+from pse_stocks_etl_spark.plans import REGISTRY
 
 from conftest import SF_DIR
 
@@ -396,14 +396,14 @@ def test_rollup_cascade_actually_cascades(spark):
         max_size=60,
     ).filter(lambda rs: len({u for u, pre, _ in rs if pre}) >= 2)
 )
+@example(rows=[(1, False, 0), (1, False, 0), (1, True, 0), (2, True, 0)])
 @settings(**_HYP)
 def test_cuped_equals_python_model(spark, tmp_path_factory, rows):
     """CUPED readout == a python model applying Deng et al.'s formulas
-    with the same expression order. Guard: var(x) must be nonzero, so
-    the filter keeps at least two distinct pre-period users (they get
-    different hour offsets → different x sums almost surely; a zero
-    denominator would make BOTH sides NaN and still compare equal,
-    but the test is about the finite path)."""
+    with the same expression order. The filter keeps at least two
+    distinct pre-period users. Their pre-period sums can still be equal
+    (the pinned example: all zero), so var(x) = 0; both sides then
+    define θ = 0 and the adjusted mean equals the post-period mean."""
     import datetime as dt
 
     path = tmp_path_factory.mktemp("cuped")
@@ -429,7 +429,8 @@ def test_cuped_equals_python_model(spark, tmp_path_factory, rows):
     sxx = sum(xs[u] * xs[u] for u in users)
     sxy = sum(xs[u] * ys[u] for u in users)
     xbar = float(sx) / n
-    th = (float(sxy) - float(sx) * sy / n) / (float(sxx) - float(sx) * sx / n)
+    var_x = float(sxx) - float(sx) * sx / n
+    th = 0.0 if var_x == 0 else (float(sxy) - float(sx) * sy / n) / var_x
     expect = {}
     for v in {u % 2 for u in users}:
         vu = [u for u in users if u % 2 == v]

@@ -349,7 +349,7 @@ def test_domain_cap_salted_topk_exact_on_megadomain(spark, tmp_path):
 # corpus_build: stage-consistency contracts
 # --------------------------------------------------------------------------
 def test_corpus_build_is_consistent_with_its_stages(spark, sf_dir):
-    from pse_stocks_etl_spark.plans.registry import REGISTRY
+    from pse_stocks_etl_spark.plans import REGISTRY
 
     build = {r["doc_id"]: r.asDict()
              for r in REGISTRY["corpus_build"].fn(spark, sf_dir).collect()}
@@ -394,7 +394,7 @@ def test_incremental_contamination_equals_recompute_delta(spark, sf_dir):
         CONTAM_MIN_SHARED,
     )
     from pse_stocks_etl_spark.plans.llm_queries import _shingles_cached
-    from pse_stocks_etl_spark.plans.registry import REGISTRY
+    from pse_stocks_etl_spark.plans import REGISTRY
     from pse_stocks_etl_spark.plans.round16_queries import NEW_BENCH_REM
 
     import pyspark.sql.functions as F
@@ -427,7 +427,7 @@ def test_incremental_contamination_equals_recompute_delta(spark, sf_dir):
 
 
 def test_incremental_contamination_broadcasts_only_the_new_slice(spark, sf_dir):
-    from pse_stocks_etl_spark.plans.registry import REGISTRY
+    from pse_stocks_etl_spark.plans import REGISTRY
 
     plan = (
         REGISTRY["docs_incremental_contamination"]
@@ -479,7 +479,7 @@ def test_url_filter_rules_and_precedence(spark, sf_dir):
 
 
 def test_incremental_url_dedup_admits_exactly_the_new_articles(spark, sf_dir):
-    from pse_stocks_etl_spark.plans.registry import REGISTRY
+    from pse_stocks_etl_spark.plans import REGISTRY
 
     admitted = {
         r["admit_id"]
@@ -527,7 +527,7 @@ def _py_cdc_chunks(text: str) -> list[tuple[str, int]]:
 def test_cdc_chunks_match_pure_python_reference(spark, sf_dir):
     import pyarrow.parquet as pq
 
-    from pse_stocks_etl_spark.plans.registry import REGISTRY
+    from pse_stocks_etl_spark.plans import REGISTRY
 
     tbl = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
     texts = {
@@ -576,7 +576,7 @@ def test_cdc_boundaries_resynchronize_after_edits():
 
 def test_shard_manifest_windows_are_full_except_the_tail(spark, sf_dir):
     from pse_stocks_etl_spark.plans.corpus_queries import PACK_CAPACITY
-    from pse_stocks_etl_spark.plans.registry import REGISTRY
+    from pse_stocks_etl_spark.plans import REGISTRY
 
     rows = REGISTRY["corpus_shard_manifest"].fn(spark, sf_dir).collect()
     last = {}
@@ -594,7 +594,7 @@ def test_shard_manifest_windows_are_full_except_the_tail(spark, sf_dir):
 def test_phrase_match_counts_against_pure_python(spark, sf_dir):
     import pyarrow.parquet as pq
 
-    from pse_stocks_etl_spark.plans.registry import REGISTRY
+    from pse_stocks_etl_spark.plans import REGISTRY
     from pse_stocks_etl_spark.plans.round16_queries import PHRASE
 
     tbl = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
@@ -638,7 +638,7 @@ def test_cdc_plan_scans_the_corpus_exactly_once(spark, sf_dir):
 # Batch 4: content drift, multimodal pair curation
 # --------------------------------------------------------------------------
 def test_url_content_drift_flags_multi_version_urls(spark, sf_dir):
-    from pse_stocks_etl_spark.plans.registry import REGISTRY
+    from pse_stocks_etl_spark.plans import REGISTRY
 
     rows = REGISTRY["docs_url_content_drift"].fn(spark, sf_dir).collect()
     by_url = {r["canonical_url"]: r for r in rows if r["canonical_url"]}
@@ -656,7 +656,7 @@ def test_url_content_drift_flags_multi_version_urls(spark, sf_dir):
 
 
 def test_pair_filter_rules_and_reason_precedence(spark, sf_dir):
-    from pse_stocks_etl_spark.plans.registry import REGISTRY
+    from pse_stocks_etl_spark.plans import REGISTRY
     from pse_stocks_etl_spark.plans.round16_queries import (
         PAIR_MAX_DURATION,
         PAIR_MAX_TOKENS,
@@ -693,7 +693,7 @@ def test_pair_filter_rules_and_reason_precedence(spark, sf_dir):
 # Batch 5: robots.txt longest-match, WARC record walk
 # --------------------------------------------------------------------------
 def test_robots_longest_match_allow_overrides_disallow(spark, sf_dir):
-    from pse_stocks_etl_spark.plans.registry import REGISTRY
+    from pse_stocks_etl_spark.plans import REGISTRY
 
     rows = [
         r.asDict()
@@ -816,7 +816,7 @@ def test_warc_gz_corruption_fails_loudly():
 
 
 def test_html_extract_recovers_every_document(spark, sf_dir):
-    from pse_stocks_etl_spark.plans.registry import REGISTRY
+    from pse_stocks_etl_spark.plans import REGISTRY
 
     rows = REGISTRY["docs_html_extract"].fn(spark, sf_dir).collect()
     non_null = [r for r in rows if r["recovered"] is not None]

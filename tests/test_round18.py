@@ -26,7 +26,7 @@ import math
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from pse_stocks_etl_spark.plans.registry import REGISTRY
+from pse_stocks_etl_spark.plans import REGISTRY
 from pse_stocks_etl_spark.plans.round18_queries import (  # noqa: F401
     BUDGET_DIV,
     PPM,

@@ -23,7 +23,7 @@ import re
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from pse_stocks_etl_spark.plans.registry import REGISTRY
+from pse_stocks_etl_spark.plans import REGISTRY
 
 from conftest import SF_DIR
 

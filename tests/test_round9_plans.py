@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import re
 
-from pse_stocks_etl_spark.plans.registry import REGISTRY
+from pse_stocks_etl_spark.plans import REGISTRY
 
 # Importing populates REGISTRY.
 from pse_stocks_etl_spark.plans import round9_queries  # noqa: F401
