@@ -7,13 +7,11 @@ query path and distributes the fetch itself:
 
 - `PseEdgeClient` — the real HTTP client surface (company directory,
   company info, daily price history). The TRANSPORT is injectable: the
-  default `RequestsTransport` does live HTTP (with per-call
-  connect/read timeouts and bounded retry+backoff — a stalled
+  default `UrllibTransport` does live HTTP on the standard library
+  (with a timeout on every call and bounded retry+backoff — a stalled
   connection can never hang a sync), while tests inject a recorded
   transport so all three client methods run their full
-  request→parse→normalize path hermetically. `requests` itself is
-  absent from this image, so the live transport raises a
-  clearly-marked NotImplementedError at construction.
+  request→parse→normalize path hermetically.
 - `FakePseEdge` — a deterministic synthetic market-data source with the
   exact same contract, seeded per (symbol, date) via md5, used by tests
   and the sync demo. Prices are 2-dp decimals satisfying
@@ -59,74 +57,15 @@ class UnknownSymbolError(Exception):
     reference's UnknownSymbolException, pse_edge.py:63-67)."""
 
 
-class RequestsTransport:
-    """Live HTTP transport: `requests` with (connect, read) timeouts on
-    every call and bounded retry with exponential backoff on transient
-    failures (connection errors, timeouts, HTTP 5xx). 4xx responses
-    raise immediately — retrying a bad request never helps.
-
+class UrllibTransport:
+    """Live HTTP transport on the STANDARD LIBRARY only (urllib): a
+    timeout on every call and bounded retry with exponential backoff on
+    transient failures (connection errors, timeouts, HTTP 5xx); 4xx
+    responses raise immediately — retrying a bad request never helps.
     The reference's requests calls pass no timeout (reference
     pse_edge.py:80-118); this surface runs on real networks, so a
-    stalled connection must fail the task, not hang the sync.
-    """
-
-    def __init__(
-        self,
-        timeout: tuple[float, float] = (5.0, 30.0),
-        retries: int = 3,
-        backoff: float = 1.0,
-    ) -> None:
-        try:
-            import requests
-        except ImportError:
-            raise NotImplementedError(
-                "PSE Edge HTTP connector requires network + `requests`; "
-                "use FakePseEdge or a recorded transport in offline "
-                "environments."
-            ) from None
-        self._requests = requests
-        self.timeout = timeout
-        self.retries = retries
-        self.backoff = backoff
-
-    def _call(self, fn) -> tuple[str, dict]:  # pragma: no cover - network
-        import time
-
-        exc = self._requests.exceptions
-        last: Exception | None = None
-        for attempt in range(self.retries):
-            try:
-                r = fn()
-                if r.status_code >= 500 and attempt < self.retries - 1:
-                    last = exc.HTTPError(f"HTTP {r.status_code}", response=r)
-                    time.sleep(self.backoff * (2**attempt))
-                    continue
-                r.raise_for_status()
-                return r.text, dict(r.headers)
-            except (exc.ConnectionError, exc.Timeout) as e:
-                last = e
-                if attempt < self.retries - 1:
-                    time.sleep(self.backoff * (2**attempt))
-        raise last  # type: ignore[misc]
-
-    def get(self, url: str) -> tuple[str, dict]:  # pragma: no cover - network
-        return self._call(lambda: self._requests.get(url, timeout=self.timeout))
-
-    def post(
-        self, url: str, data: dict | None = None, json: dict | None = None
-    ) -> tuple[str, dict]:  # pragma: no cover - network
-        return self._call(
-            lambda: self._requests.post(url, data=data, json=json, timeout=self.timeout)
-        )
-
-
-class UrllibTransport:
-    """Live HTTP transport on the STANDARD LIBRARY only (urllib) — the
-    same contract as RequestsTransport (timeouts on every call, bounded
-    retry with exponential backoff on transient failures and HTTP 5xx,
-    4xx raise immediately), with zero third-party dependencies, so the
-    live connector runs in any Python environment including this one.
-    Proven over real sockets by the loopback-server tests
+    stalled connection must fail the task, not hang the sync. Proven
+    over real sockets by the loopback-server tests
     (tests/test_pse_edge_live.py)."""
 
     def __init__(
@@ -196,9 +135,7 @@ class PseEdgeClient:
     against recorded responses — including the reference's own golden
     values (JFC company_id=86 / security_id=158; 2022-03-01 OHLC
     241.4/245/240/240; reference tests/integration/test_pse_edge.py:
-    38-46, 60-75). The default transport is live `RequestsTransport`
-    (constructed lazily on first use, since this image lacks
-    `requests`)."""
+    38-46, 60-75). The default transport is live `UrllibTransport`."""
 
     COMPANY_SEARCH_URL = "https://edge.pse.com.ph/companyDirectory/search.ax"
     AUTOCOMPLETE_URL = (
@@ -218,17 +155,7 @@ class PseEdgeClient:
     }
 
     def __init__(self, transport=None) -> None:
-        self._transport = transport
-
-    @property
-    def transport(self):
-        if self._transport is None:
-            try:
-                self._transport = RequestsTransport()
-            except NotImplementedError:
-                # stdlib fallback: live HTTP works without `requests`
-                self._transport = UrllibTransport()
-        return self._transport
+        self.transport = UrllibTransport() if transport is None else transport
 
     def _search_page(self, **payload) -> tuple[str, str]:
         text, headers = self.transport.post(

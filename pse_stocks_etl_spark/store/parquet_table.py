@@ -23,6 +23,14 @@ snapshot lives INSIDE the version dir, schema evolution commits
 atomically with its data, and time travel replays the schema as of that
 version — both Delta behaviors.
 
+Every write is a function of one read snapshot: its base version number
+and that version's `_schema.json`. Like Delta's log, the table owns the
+schema and a handle caches none: the constructor's `schema` types only
+the first commit, `.schema` reads the current snapshot, and a commit
+writes its base's schema (an evolving merge adds its new columns to
+it), so a handle opened before another writer evolved the table cannot
+commit the evolution away.
+
 Every commit runs its plan ONCE: CHECK constraints are fused into the
 write job's projection (a violating row fails the write, whose staging
 dir is then removed), never checked by a separate pass over the commit
@@ -32,8 +40,8 @@ Scale posture: `partition_by` lays the fact table out by date (mirrors
 BigQuery `PARTITION BY date`, SURVEY.md §4) so incremental merges and
 date-range scans prune files; merge itself is the relational anti-join ∪
 winners plan from operators/merge.py, which shuffles only on the key —
-or, when the batch touches no existing partition (the daily sync), a
-plain append of the deduped batch with no join at all.
+or, when the batch touches no existing row (the daily sync), a plain
+append of the deduped batch with no join at all.
 """
 
 from __future__ import annotations
@@ -56,8 +64,9 @@ from ..operators.merge import merge_dataframes
 _VERSIONS = "_versions"
 _SCHEMA = "_schema.json"
 # Strict version-dir name: a stray file or partial artifact (e.g.
-# 'v_tmp') must never be parsed as a version (round-2 review).
-_VERSION_RE = re.compile(r"^v\d{5}$")
+# 'v_tmp') must never be parsed as a version (round-2 review). Five
+# digits is the padding, not a limit: v99999 is followed by v100000.
+_VERSION_RE = re.compile(r"^v\d{5,}$")
 # Uncommitted dirs: a writer's staging dir (named after its base), trash.
 _STAGE_RE = re.compile(r"^\.stage-(\d+)-")
 _TRASH = ".trash-"
@@ -75,6 +84,10 @@ class ConcurrentWriteError(RuntimeError):
     automatically."""
 
 
+def _vname(version: int) -> str:
+    return f"v{version:05d}"
+
+
 class ParquetTable:
     def __init__(
         self,
@@ -86,7 +99,9 @@ class ParquetTable:
     ) -> None:
         self.spark = spark
         self.path = path
-        self.schema = schema
+        # Types the first commit only: from then on the table, not the
+        # handle, owns the schema (`.schema`, `_schema_at`).
+        self._first_schema = schema
         self.partition_by = tuple(partition_by)
         # Delta CHECK-constraint analog: {name: SQL predicate}. Enforced
         # on every commit with SQL CHECK semantics — a row violates only
@@ -95,51 +110,60 @@ class ParquetTable:
         # never the hardlinked rest of the table).
         self.constraints = dict(constraints or {})
         os.makedirs(os.path.join(path, _VERSIONS), exist_ok=True)
-        # The current version's schema snapshot supersedes the
-        # constructor's: like Delta's log, the table — not the caller —
-        # owns the current schema once it has evolved.
-        cur = self._pointer()
-        snap = self._version_schema(cur) if cur else None
-        if snap is not None:
-            self.schema = snap
 
-    def _version_schema(self, vname: str) -> T.StructType | None:
-        """Schema snapshot stored inside a version dir, if any."""
-        sp = os.path.join(self.path, _VERSIONS, vname, _SCHEMA)
-        if not os.path.exists(sp):
-            return None
-        with open(sp) as f:
+    @property
+    def schema(self) -> T.StructType:
+        """The current version's schema snapshot."""
+        return self._schema_at(self.current_version())
+
+    def _vdir(self, version: int) -> str:
+        return os.path.join(self.path, _VERSIONS, _vname(version))
+
+    def _schema_at(self, version: int) -> T.StructType:
+        """The schema snapshot committed inside `version` (the
+        constructor's schema before the first commit)."""
+        if not version:
+            return self._first_schema
+        with open(os.path.join(self._vdir(version), _SCHEMA)) as f:
             return T.StructType.fromJson(json.load(f))
 
-    def _write_version_schema(self, target: str) -> None:
-        """Snapshot self.schema into the (not-yet-committed) version dir.
+    def _write_version_schema(self, target: str, schema: T.StructType) -> None:
+        """Snapshot `schema` into the (not-yet-committed) version dir.
         Spark's parquet reader ignores underscore-prefixed files, so the
         snapshot can live beside the data it describes — and the
         publishing rename then commits schema + data atomically."""
         with open(os.path.join(target, _SCHEMA), "w") as f:
-            json.dump(self.schema.jsonValue(), f)
+            json.dump(schema.jsonValue(), f)
+
+    def _scan(self, version: int, schema: T.StructType | None = None) -> DataFrame:
+        """Scan `version` with `schema` (default: its own snapshot)."""
+        if schema is None:
+            schema = self._schema_at(version)
+        if not version:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(self._vdir(version))
 
     # -- commit protocol ---------------------------------------------------
     def _pointer(self) -> str | None:
         v = self.current_version()
-        return f"v{v:05d}" if v else None
+        return _vname(v) if v else None
 
     def current_version(self) -> int:
         """The highest published version; 0 before the first commit."""
         return max(self.history(), default=0)
 
     def _guarded_projection(self, df: DataFrame) -> DataFrame:
-        """Project `df` onto the table schema with every CHECK constraint
-        fused in: one non-partition column becomes
-        `CASE WHEN <pred> IS FALSE THEN raise_error(...) ELSE col END`,
-        so the write job itself fails on the first violating row — no
-        separate validation pass over the commit plan. A projected
-        column (not a Filter) so Catalyst can neither prune the guard
-        nor push it below the merge's anti-join onto rows that are
-        never written."""
-        names = [f.name for f in self.schema.fields]
+        """Fuse every CHECK constraint into a projection of `df` (already
+        projected onto the table schema): one non-partition column
+        becomes `CASE WHEN <pred> IS FALSE THEN raise_error(...) ELSE
+        col END`, so the write job itself fails on the first violating
+        row — no separate validation pass over the commit plan. A
+        projected column (not a Filter) so Catalyst can neither prune
+        the guard nor push it below the merge's anti-join onto rows that
+        are never written."""
         if not self.constraints:
-            return df.select(*names)
+            return df
+        names = df.columns
         guard = next((c for c in names if c not in self.partition_by), names[0])
         checked = None
         for name, predicate in self.constraints.items():
@@ -158,12 +182,14 @@ class ParquetTable:
         df: DataFrame,
         expected_version: int | None = None,
         carry_untouched: str | None = None,
+        schema: T.StructType | None = None,
     ) -> None:
         """Stage `df` as the next version and publish it; the commit
         refuses if the table moved past `expected_version` (the caller's
-        read snapshot). The plan runs once: CHECK constraints are fused
-        into the write. `carry_untouched=pcol`: `df` covers only some
-        `pcol` partitions; every other one of the base version is
+        read snapshot). `schema` is the new version's schema; by default
+        the base version's. The plan runs once: CHECK constraints are
+        fused into the write. `carry_untouched=pcol`: `df` covers only
+        some `pcol` partitions; every other one of the base version is
         hardlinked in. A failed write removes its staging dir; a CHECK
         violation surfaces as ValueError."""
         base = self.current_version()
@@ -172,15 +198,18 @@ class ParquetTable:
                 f"table advanced to v{base} after this transaction read "
                 f"v{expected_version} — re-derive and retry"
             )
+        if schema is None:
+            schema = self._schema_at(base)
         stage = os.path.join(self.path, _VERSIONS, f".stage-{base:05d}-{uuid.uuid4().hex}")
         try:
-            writer = self._guarded_projection(df).write.mode("overwrite")
+            projected = self._guarded_projection(df.select(*schema.fieldNames()))
+            writer = projected.write.mode("overwrite")
             if self.partition_by:
                 writer = writer.partitionBy(*self.partition_by)
             writer.parquet(stage)
-            self._write_version_schema(stage)
+            self._write_version_schema(stage, schema)
             if carry_untouched and base:
-                self._link_untouched(f"v{base:05d}", stage, carry_untouched)
+                self._link_untouched(_vname(base), stage, carry_untouched)
             self._publish(stage, base + 1)
         except Exception as e:
             shutil.rmtree(stage, ignore_errors=True)
@@ -194,7 +223,7 @@ class ParquetTable:
         """The commit point: rename the finished staging dir onto
         `v{version}`. A rename onto a non-empty dir fails, so two racing
         writers can never both win a version number."""
-        vname = f"v{version:05d}"
+        vname = _vname(version)
         target = os.path.join(self.path, _VERSIONS, vname)
         try:
             os.rename(stage, target)
@@ -224,7 +253,8 @@ class ParquetTable:
         # target row, so an affected partition never comes out empty.
         # Deriving the exclusion set from the target listing (not from
         # str(v)) keeps it correct for values Spark Hive-escapes in dir
-        # names (':', '%', '#', ...).
+        # names (':', '%', '#', ...) and for NULL, which Spark writes as
+        # __HIVE_DEFAULT_PARTITION__.
         written_dirs = {e for e in os.listdir(target) if e.startswith(f"{pcol}=")}
         for entry in os.listdir(src_root):
             if not entry.startswith(f"{pcol}=") or entry in written_dirs:
@@ -244,7 +274,7 @@ class ParquetTable:
     def init_empty(self) -> None:
         """K10: create the table as an empty typed relation."""
         if not self.exists():
-            self._commit(self.spark.createDataFrame([], self.schema))
+            self._commit(self.spark.createDataFrame([], self._first_schema))
 
     def read(self, version: int | None = None) -> DataFrame:
         """S5: scan the current version (schema-enforced). `version=`
@@ -256,30 +286,17 @@ class ParquetTable:
         that version) — an old version does not grow null-filled
         columns added by later evolution."""
         if version is None:
-            v = self._pointer()
-            if v is None:
-                return self.spark.createDataFrame([], self.schema)
-            # Current reads use the LIVE table schema (self.schema), not
-            # the stored snapshot: during an evolving merge the target
-            # must already present the new null-filled columns so the
-            # upsert union lines up. The constructor seeds self.schema
-            # from the current snapshot, so fresh handles agree.
-            schema = self.schema
-        else:
-            v = f"v{version:05d}"
-            if not os.path.isdir(os.path.join(self.path, _VERSIONS, v)):
-                raise ValueError(
-                    f"version {version} not retained; available: {self.history()}"
-                )
-            schema = self._version_schema(v) or self.schema
-        return self.spark.read.schema(schema).parquet(
-            os.path.join(self.path, _VERSIONS, v)
-        )
+            return self._scan(self.current_version())
+        if not os.path.isdir(self._vdir(version)):
+            raise ValueError(
+                f"version {version} not retained; available: {self.history()}"
+            )
+        return self._scan(version)
 
     def history(self) -> list[int]:
         """Retained version numbers, oldest first (Delta `DESCRIBE
         HISTORY` analog — what `read(version=)` accepts). Only strict
-        v\\d{5} entries count: stray files / partial artifacts in
+        v\\d{5,} entries count: stray files / partial artifacts in
         _versions never break history() or the read(version=) error
         path."""
         vdir = os.path.join(self.path, _VERSIONS)
@@ -300,11 +317,7 @@ class ParquetTable:
         History is preserved — the restore is itself a commit, so a
         mistaken restore can be restored away; nothing is deleted
         (vacuum stays the only destructive operation)."""
-        df = self.read(version=version)
-        snap = self._version_schema(f"v{version:05d}")
-        if snap is not None:
-            self.schema = snap
-        self._commit(df)
+        self._commit(self.read(version=version), schema=self._schema_at(version))
 
     def merge(
         self,
@@ -322,65 +335,43 @@ class ParquetTable:
         Optimistic concurrency: the commit refuses if another writer
         advanced the table past the merge's read snapshot
         (ConcurrentWriteError); a keyed merge is re-derivable, so up to
-        `conflict_retries` retries re-read and re-merge — Delta's
-        conflict-then-retry for non-overlapping writers.
+        `conflict_retries` retries re-derive it, schema included, from
+        the new snapshot — Delta's conflict-then-retry.
 
         `evolve_schema=True` is Delta's `mergeSchema`: source columns
-        the table lacks are appended (nullable) to the table schema,
-        snapshotted INSIDE the new version dir so the evolution commits
-        atomically with its data (a failed commit evolves nothing);
-        existing files need no rewrite — the parquet reader null-fills
-        declared-but-absent columns, including hardlinked partition
-        dirs carried by the pruned fast path.
+        the table lacks are appended (nullable) to the snapshot's
+        schema, which commits INSIDE the new version dir, atomically
+        with its data; existing files need no rewrite — the parquet
+        reader null-fills declared-but-absent columns.
 
-        Partition-pruned fast path: when the table is partitioned on a
-        merge-key column (the date-partitioned fact), only partitions
-        whose values appear in the source batch are re-merged and
-        rewritten; untouched partition directories are carried into the
-        new version as hardlinks — zero data movement. This is the
-        file-level rewrite Delta's MERGE does via its log, and the
-        reason an incremental sync of a trailing window costs
-        O(window), not O(table) (SCALE.md "Merge / upsert").
+        Partition pruning: on a table partitioned by a merge-key column
+        (the date-partitioned fact), only partitions whose values,
+        NULL included, appear in the batch are re-merged and rewritten;
+        the rest are carried into the new version as hardlinks. This is
+        the file-level rewrite Delta's MERGE does via its log, and why
+        an incremental sync costs O(window), not O(table) (SCALE.md
+        "Merge / upsert").
 
-        Append-only fast path: when the pruned target slice is empty —
-        the batch lands only in partitions the table does not have yet,
-        as a daily sync's does — every source key is an insert, so the
-        commit is the deduped batch with `set_on_write` applied: no
-        classify join, no anti-join. The rows equal merge_dataframes'.
+        Append-only: when the (pruned) target slice is empty — as a
+        daily sync's new date partition is — every source key is an
+        insert, so the commit is the deduped batch with `set_on_write`
+        applied: no classify join, no anti-join. The rows equal
+        merge_dataframes'.
 
-        The empty-batch guard costs no job of its own on the pruned path
-        (the affected-partition collect shows an empty batch); an empty
-        batch commits nothing and evolves no schema. The commit runs its
-        plan once, but the pruned path reads `source` twice (that
-        collect and the write), so a nondeterministic source should be
+        An empty batch commits nothing and evolves no schema; on a
+        pruned table that guard is the affected-partition collect. The
+        commit runs its plan once, but `source` is read more than once
+        (the guard and the write), so a nondeterministic source should be
         persisted by the caller, as the sync path does.
         """
-        old_schema = self.schema
-        if evolve_schema:
-            existing = {f.name for f in self.schema.fields}
-            added = [
-                T.StructField(f.name, f.dataType, True)
-                for f in source.schema.fields
-                if f.name not in existing
-            ]
-            if added:
-                # In-memory only: the commit below snapshots it into the
-                # version dir; a failed or skipped commit rolls it back.
-                self.schema = T.StructType(list(self.schema.fields) + added)
-        committed = False
-        try:
-            for attempt in range(conflict_retries + 1):
-                try:
-                    committed = self._merge_impl(
-                        source, keys, freshness_col, dedup_order, set_on_write
-                    )
-                    break
-                except ConcurrentWriteError:
-                    if attempt == conflict_retries:
-                        raise
-        finally:
-            if not committed:
-                self.schema = old_schema
+        for attempt in range(conflict_retries + 1):
+            try:
+                return self._merge_impl(
+                    source, keys, freshness_col, dedup_order, set_on_write, evolve_schema
+                )
+            except ConcurrentWriteError:
+                if attempt == conflict_retries:
+                    raise
 
     def _merge_impl(
         self,
@@ -389,48 +380,47 @@ class ParquetTable:
         freshness_col: str | None,
         dedup_order: Sequence[Column | str] | None,
         set_on_write: dict[str, Column] | None,
-    ) -> bool:
-        """One merge attempt; returns whether a version was committed.
+        evolve_schema: bool,
+    ) -> None:
+        """One merge attempt.
 
         P6 non-empty guard, at the STORE boundary: an empty source must
         not burn a version (found by the stateful model test — an hourly
         sync poll with no new data was committing 24 identical version
         dirs a day until vacuum), nor evolve the schema."""
-        # Read snapshot for the optimistic-concurrency check: every
-        # self.read() below resolves THIS version, and the commit
+        # Read snapshot for the optimistic-concurrency check: every scan
+        # below resolves THIS version, with its schema, and the commit
         # refuses if the table moved past it meanwhile.
         base = self.current_version()
+        schema = self._schema_at(base)
+        if evolve_schema:
+            known = set(schema.fieldNames())
+            added = [f for f in source.schema.fields if f.name not in known]
+            schema = T.StructType(
+                schema.fields + [T.StructField(f.name, f.dataType, True) for f in added]
+            )
+        target = self._scan(base, schema)
         pcol = (
             self.partition_by[0]
             if len(self.partition_by) == 1 and self.partition_by[0] in keys
             else None
         )
-
-        def full_merge() -> DataFrame:
-            return merge_dataframes(
-                self.read(), source, keys, freshness_col, dedup_order, set_on_write
-            )
-
-        if pcol is None or not base:
+        if pcol is None:
             if source.isEmpty():
-                return False
-            self._commit(full_merge(), expected_version=base)
-            return True
-        # Affected partition values: one row per distinct source value —
-        # bounded by the batch's window, safe to collect. An empty list
-        # is the empty-batch guard: no separate emptiness job.
-        affected = [r[0] for r in source.select(pcol).distinct().collect()]
-        if not affected:
-            return False
-        if any(v is None for v in affected):
-            # NULL partition values break both the isin() pruning filter
-            # (NULL never matches) and the hardlink exclusion (Spark
-            # writes __HIVE_DEFAULT_PARTITION__, not 'None') — take the
-            # always-correct full-merge path for such batches.
-            self._commit(full_merge(), expected_version=base)
-            return True
-        tgt_affected = self.read().filter(F.col(pcol).isin(affected))
-        if tgt_affected.isEmpty():
+                return
+        else:
+            # Affected partition values: one row per distinct source
+            # value — bounded by the batch's window, safe to collect. An
+            # empty list is the empty-batch guard: no separate job.
+            affected = [r[0] for r in source.select(pcol).distinct().collect()]
+            if not affected:
+                return
+            # Null-safe prune: isin() never matches NULL.
+            prune = F.col(pcol).isin([v for v in affected if v is not None])
+            if any(v is None for v in affected):
+                prune = prune | F.col(pcol).isNull()
+            target = target.filter(prune)
+        if target.isEmpty():
             # Append-only: every source key is an insert, so this is
             # exactly what merge_dataframes computes, minus its classify
             # join and anti-join against an empty slice. Partition
@@ -442,10 +432,9 @@ class ParquetTable:
                 merged = merged.withColumns(dict(set_on_write))
         else:
             merged = merge_dataframes(
-                tgt_affected, source, keys, freshness_col, dedup_order, set_on_write
+                target, source, keys, freshness_col, dedup_order, set_on_write
             )
-        self._commit(merged, expected_version=base, carry_untouched=pcol)
-        return True
+        self._commit(merged, expected_version=base, carry_untouched=pcol, schema=schema)
 
     def optimize(
         self,
@@ -471,7 +460,7 @@ class ParquetTable:
         over the version it read (else ConcurrentWriteError).
         """
         base = self.current_version()
-        df = self.read()
+        df = self._scan(base)
         if len(cluster_by) >= 2:
             z = self._zvalue(df, cluster_by, zorder_bits)
             df = df.withColumn("__z", z)
@@ -542,7 +531,7 @@ class ParquetTable:
             self._commit(self.spark.createDataFrame([], self.schema))
         else:
             base = self.current_version()
-            kept = self.read().filter(~condition.eqNullSafe(F.lit(True)))
+            kept = self._scan(base).filter(~condition.eqNullSafe(F.lit(True)))
             self._commit(kept, expected_version=base)
 
     def vacuum(self, retain_versions: int = 2) -> list[str]:
@@ -553,7 +542,9 @@ class ParquetTable:
         never leaves a half-deleted version. Returns removed versions."""
         vdir = os.path.join(self.path, _VERSIONS)
         entries = sorted(os.listdir(vdir))
-        versions = [e for e in entries if _VERSION_RE.match(e)]
+        versions = sorted(
+            (e for e in entries if _VERSION_RE.match(e)), key=lambda e: int(e[1:])
+        )
         removed = [v for v in versions[:-1] if v not in versions[-retain_versions:]]
         current = self.current_version()
         for e in entries:

@@ -195,13 +195,3 @@ def test_unknown_symbol_raises():
 
     with pytest.raises(UnknownSymbolError):
         PseEdgeClient(transport=_Empty()).get_company_info("NOPE")
-
-
-def test_live_transport_requires_requests():
-    from pse_stocks_etl_spark.sources.pse_edge import RequestsTransport
-
-    try:
-        import requests  # noqa: F401
-    except ImportError:
-        with pytest.raises(NotImplementedError, match="requests"):
-            RequestsTransport()

@@ -187,8 +187,13 @@ def test_optimize_clusters_and_preserves_content(spark, tmp_path):
 
 
 def test_partitioned_merge_null_partition_falls_back(spark, tmp_path):
-    """Source rows with NULL partition values must take the full-merge
-    path (isin() pruning never matches NULL) and still merge correctly."""
+    """Source rows with NULL partition values take the pruned path like
+    any other batch: the prune is null-safe (isin() OR IS NULL, since
+    isin() never matches NULL), so they still merge correctly, and the
+    untouched d=2024-01-01 partition is carried as hardlinks, not
+    rewritten by a full merge."""
+    import os
+
     nullable = T.StructType(
         [
             T.StructField("k", T.StringType(), False),
@@ -205,9 +210,13 @@ def test_partitioned_merge_null_partition_falls_back(spark, tmp_path):
     src = spark.createDataFrame(
         [("B", None, 2.0, dt.datetime(2024, 1, 2))], nullable
     )
+    untouched = os.path.join(t.path, "_versions", "v00001", "d=2024-01-01")
+    inodes = {os.stat(os.path.join(untouched, f)).st_ino for f in os.listdir(untouched)}
     t.merge(src, keys=("k", "d"))
     got = sorted((r.k, r.d, r.v) for r in t.read().collect())
     assert got == [("A", dt.date(2024, 1, 1), 1.0), ("B", None, 2.0)]
+    carried = os.path.join(t.path, "_versions", "v00002", "d=2024-01-01")
+    assert {os.stat(os.path.join(carried, f)).st_ino for f in os.listdir(carried)} == inodes
     # replay converges (the NULL-key row matches itself)
     t.merge(src, keys=("k", "d"))
     assert t.read().count() == 2
@@ -344,6 +353,86 @@ def test_schema_evolution_atomic_on_failed_commit(spark, tmp_path):
     assert "note" not in {f.name for f in t.schema.fields}
     assert "note" not in t.read().columns
     assert "note" not in ParquetTable(spark, t.path, SCHEMA).read().columns
+
+
+EVOLVED = T.StructType(SCHEMA.fields + [T.StructField("note", T.StringType(), True)])
+
+
+def _noted(spark, *specs):
+    """Rows of the evolved schema: (k, d, v, note)."""
+    return spark.createDataFrame(
+        [(k, dt.date.fromisoformat(d), v, dt.datetime(2024, 2, 1), n) for k, d, v, n in specs],
+        EVOLVED,
+    )
+
+
+@pytest.mark.parametrize("partition_by", [(), ("d",)], ids=["unpartitioned", "partitioned"])
+def test_stale_handle_keeps_concurrent_schema_evolution(spark, tmp_path, partition_by):
+    """A handle opened before another handle's evolve_schema merge reads
+    the evolved column, and its later merge (of an existing row and a
+    new one) and overwrite keep it: a write takes its schema from the
+    version it is based on, not from the handle."""
+    path = str(tmp_path / "stale_schema")
+    h1 = ParquetTable(spark, path, SCHEMA, partition_by=partition_by)
+    h1.overwrite(
+        spark.createDataFrame(_rows(("a", "2024-01-01", 1.0, "2024-01-01T00:00:00")), SCHEMA)
+    )
+    h2 = ParquetTable(spark, path, SCHEMA, partition_by=partition_by)
+    h1.merge(_noted(spark, ("b", "2024-01-02", 2.0, "x")), keys=("k", "d"), evolve_schema=True)
+    assert h2.schema == h1.schema
+    assert "note" in h2.read().columns
+    h2.merge(
+        _noted(spark, ("b", "2024-01-02", 20.0, "y"), ("c", "2024-01-03", 3.0, "z")),
+        keys=("k", "d"),
+    )
+    fresh = ParquetTable(spark, path, SCHEMA)
+    assert set(fresh.read().columns) == set(EVOLVED.fieldNames())
+    got = {r.k: (r.v, r.note) for r in fresh.read().collect()}
+    assert got == {"a": (1.0, None), "b": (20.0, "y"), "c": (3.0, "z")}
+    h2.overwrite(_noted(spark, ("d", "2024-01-04", 4.0, "w")))
+    assert [(r.k, r.note) for r in fresh.read().collect()] == [("d", "w")]
+
+
+def test_failed_restore_leaves_handle_schema_current(spark, tmp_path):
+    """A restore whose commit fails (here, a CHECK violation in the
+    restored rows) changes nothing: the handle's schema stays the
+    table's, and its next merge keeps the evolved column."""
+    path = str(tmp_path / "restore_fail")
+    loose = ParquetTable(spark, path, SCHEMA)
+    loose.overwrite(
+        spark.createDataFrame(_rows(("a", "2024-01-01", -1.0, "2024-01-01T00:00:00")), SCHEMA)
+    )
+    loose.merge(_noted(spark, ("a", "2024-01-01", 1.0, "x")), keys=("k", "d"), evolve_schema=True)
+    t = ParquetTable(spark, path, SCHEMA, constraints={"v_pos": "v > 0"})
+    with pytest.raises(ValueError, match="v_pos"):
+        t.restore(1)  # v1 holds v = -1
+    assert t.history() == [1, 2]
+    assert t.schema == ParquetTable(spark, path, SCHEMA).schema
+    t.merge(_noted(spark, ("c", "2024-01-03", 3.0, "y")), keys=("k", "d"))
+    got = {r.k: r.note for r in ParquetTable(spark, path, SCHEMA).read().collect()}
+    assert got == {"a": "x", "c": "y"}
+
+
+def test_version_numbers_continue_past_99999(spark, tmp_path):
+    """Five digits pad version names but do not bound them: after v99999
+    the table commits, lists, reads and vacuums v100000 and v100001
+    like any other version."""
+    import os
+
+    t = ParquetTable(spark, str(tmp_path / "wide"), SCHEMA)
+    t.overwrite(spark.createDataFrame(_rows(("A", "2024-01-01", 1.0, "2024-01-01T00:00:00")), SCHEMA))
+    vdir = os.path.join(t.path, "_versions")
+    os.rename(os.path.join(vdir, "v00001"), os.path.join(vdir, "v99999"))
+    t.overwrite(spark.createDataFrame(_rows(("B", "2024-01-02", 2.0, "2024-01-02T00:00:00")), SCHEMA))
+    t.merge(
+        spark.createDataFrame(_rows(("C", "2024-01-03", 3.0, "2024-01-03T00:00:00")), SCHEMA),
+        keys=("k", "d"),
+    )
+    assert t.history() == [99999, 100000, 100001]
+    assert sorted(r.k for r in t.read().collect()) == ["B", "C"]
+    assert [r.k for r in t.read(version=100000).collect()] == ["B"]
+    assert t.vacuum(retain_versions=2) == ["v99999"]
+    assert t.history() == [100000, 100001]
 
 
 def test_history_ignores_stray_version_artifacts(spark, tmp_path):
@@ -788,11 +877,12 @@ def test_check_violation_leaves_no_version_behind(spark, tmp_path, how):
 
 
 def test_append_only_merge_equals_full_merge(spark, tmp_path, monkeypatch):
-    """A batch that lands only in new partitions skips the classify and
-    anti-join plan (merge_dataframes is never called) yet commits the
-    same rows merge_dataframes computes over the full table: in-batch
-    duplicates deduped by dedup_order, set_on_write applied, untouched
-    partitions carried as hardlinks."""
+    """A batch that lands only in new partitions, or in an empty
+    unpartitioned table, skips the classify and anti-join plan
+    (merge_dataframes is never called) yet commits the same rows
+    merge_dataframes computes over the full table: in-batch duplicates
+    deduped by dedup_order, set_on_write applied, untouched partitions
+    carried as hardlinks."""
     import os
 
     from pse_stocks_etl_spark.operators.merge import merge_dataframes
@@ -818,6 +908,11 @@ def test_append_only_merge_equals_full_merge(spark, tmp_path, monkeypatch):
     expected = sorted(
         map(tuple, merge_dataframes(t.read(), src, ("k", "d"), **kw).collect())
     )
+    empty = ParquetTable(spark, str(tmp_path / "ao_empty"), PART_SCHEMA)
+    empty.init_empty()
+    expected_empty = sorted(
+        map(tuple, merge_dataframes(empty.read(), src, ("k", "d"), **kw).collect())
+    )
 
     def no_join_merge(*args, **kwargs):
         raise AssertionError("append-only merge must not plan the merge joins")
@@ -831,6 +926,10 @@ def test_append_only_merge_equals_full_merge(spark, tmp_path, monkeypatch):
     assert {os.stat(os.path.join(v1, f)).st_ino for f in os.listdir(v1)} == {
         os.stat(os.path.join(v2, f)).st_ino for f in os.listdir(v2)
     }
+    # An unpartitioned empty table takes the same append-only path.
+    empty.merge(src, keys=("k", "d"), **kw)
+    assert sorted(map(tuple, empty.read().collect())) == expected_empty
+    assert len(expected_empty) == 3
 
 
 # Spark jobs of one daily PseDatasets.sync (8 symbols, one new trading

@@ -1,8 +1,10 @@
 """Model-based stateful test of ParquetTable: random interleavings of
-overwrite / merge / freshness-merge / delete / restore are mirrored
-into a pure-python model (current rows + full version history), and
-after EVERY step the table must agree with the model — both the
-current read and time-travel to every retained version. Single-op
+overwrite / merge / freshness-merge / schema-evolving merge / delete /
+restore, each through one of two handles opened on the same table, are
+mirrored into a pure-python model (current columns and rows + full
+version history), and after EVERY step the table must agree with the
+model — the current read through both handles, and time-travel to every
+retained version. Single-op
 properties live in test_properties.py; this machine checks that the
 OPERATIONS COMPOSE (restore-after-merge, merge-after-delete, ...),
 which is where versioned stores actually break."""
@@ -29,6 +31,8 @@ SCHEMA = T.StructType(
         T.StructField("fresh", T.LongType()),
     ]
 )
+# The column evolve_merge adds (nullable, like Delta's mergeSchema).
+NOTE = T.StructField("note", T.LongType(), True)
 
 rows_strategy = st.lists(
     st.tuples(
@@ -40,6 +44,18 @@ rows_strategy = st.lists(
     max_size=4,
     unique_by=lambda r: r[0],  # unique keys per batch: merge input contract
 )
+noted_rows_strategy = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=5),
+        st.integers(min_value=0, max_value=99),
+        st.integers(min_value=0, max_value=9),
+        st.none() | st.integers(min_value=0, max_value=9),  # note
+    ),
+    min_size=0,
+    max_size=4,
+    unique_by=lambda r: r[0],
+)
+handle_strategy = st.integers(min_value=0, max_value=1)
 
 
 class _Crash(BaseException):
@@ -54,75 +70,100 @@ class StoreMachine(RuleBasedStateMachine):
         import tempfile
 
         self.root = tempfile.mkdtemp(prefix="store_sm_") + "/t"
-        self.table = ParquetTable(self.spark, self.root, SCHEMA)
-        df = self.spark.createDataFrame(rows, SCHEMA)
-        self.table.overwrite(df)
+        # Two handles on one table, both opened before any write: every
+        # write rule picks one, so a handle writes after the other one
+        # evolved the schema.
+        self.handles = [ParquetTable(self.spark, self.root, SCHEMA) for _ in range(2)]
+        self.table = self.handles[0]
+        self.columns = SCHEMA.fieldNames()
+        self.table.overwrite(self._df(rows))
         self.model = {r[0]: r for r in rows}
-        self.versions = [dict(self.model)]  # versions[i] == table version i+1
+        # versions[i] == (columns, rows) of table version i+1
+        self.versions = [(self.columns, dict(self.model))]
 
     def _commit_model(self):
-        self.versions.append(dict(self.model))
+        self.versions.append((self.columns, dict(self.model)))
 
-    @rule(rows=rows_strategy)
-    def overwrite(self, rows):
-        self.table.overwrite(self.spark.createDataFrame(rows, SCHEMA))
-        self.model = {r[0]: r for r in rows}
+    def _df(self, rows):
+        """`rows` as a frame of the model's current columns: a writer
+        writes the table's schema, so a missing note is NULL."""
+        evolved = "note" in self.columns
+        schema = T.StructType(SCHEMA.fields + [NOTE]) if evolved else SCHEMA
+        return self.spark.createDataFrame([self._row(r) for r in rows], schema)
+
+    def _row(self, r):
+        return r + (None,) if "note" in self.columns else r
+
+    @rule(h=handle_strategy, rows=rows_strategy)
+    def overwrite(self, h, rows):
+        self.handles[h].overwrite(self._df(rows))
+        self.model = {r[0]: self._row(r) for r in rows}
         self._commit_model()
 
-    @rule(rows=rows_strategy)
-    def merge(self, rows):
-        self.table.merge(self.spark.createDataFrame(rows, SCHEMA), keys=["k"])
+    @rule(h=handle_strategy, rows=rows_strategy)
+    def merge(self, h, rows):
+        self.handles[h].merge(self._df(rows), keys=["k"])
         if rows:  # empty-source merge is a no-op commit-wise
+            for r in rows:
+                self.model[r[0]] = self._row(r)
+            self._commit_model()
+
+    @rule(h=handle_strategy, rows=rows_strategy)
+    def merge_fresh(self, h, rows):
+        self.handles[h].merge(self._df(rows), keys=["k"], freshness_col="fresh")
+        if rows:
+            for r in rows:
+                if r[0] not in self.model or r[2] >= self.model[r[0]][2]:
+                    self.model[r[0]] = self._row(r)
+            self._commit_model()
+
+    @rule(h=handle_strategy, rows=noted_rows_strategy)
+    def evolve_merge(self, h, rows):
+        df = self.spark.createDataFrame(rows, T.StructType(SCHEMA.fields + [NOTE]))
+        self.handles[h].merge(df, keys=["k"], evolve_schema=True)
+        if rows:  # an empty batch evolves nothing
+            if "note" not in self.columns:
+                self.columns = self.columns + ["note"]
+                self.model = {k: r + (None,) for k, r in self.model.items()}
             for r in rows:
                 self.model[r[0]] = r
             self._commit_model()
 
-    @rule(rows=rows_strategy)
-    def merge_fresh(self, rows):
-        self.table.merge(
-            self.spark.createDataFrame(rows, SCHEMA),
-            keys=["k"],
-            freshness_col="fresh",
-        )
-        if rows:
-            for r in rows:
-                if r[0] not in self.model or r[2] >= self.model[r[0]][2]:
-                    self.model[r[0]] = r
-            self._commit_model()
-
-    @rule()
-    def delete_all(self):
-        self.table.delete()
+    @rule(h=handle_strategy)
+    def delete_all(self, h):
+        self.handles[h].delete()
         self.model = {}
         self._commit_model()
 
     @rule(
+        h=handle_strategy,
         rows=rows_strategy.filter(bool),
         op=st.sampled_from(["overwrite", "merge"]),
         step=st.sampled_from(["before_schema", "after_schema", "before_publish"]),
     )
-    def crash_commit(self, rows, op, step):
+    def crash_commit(self, h, rows, op, step):
         # The writer dies after its data write, after the schema
         # snapshot, or just before the publishing rename: the table,
         # and so the model, must be unchanged.
+        table = self.handles[h]
         method = "_publish" if step == "before_publish" else "_write_version_schema"
-        real = getattr(self.table, method)
+        real = getattr(table, method)
 
         def crash(*args):
             if step == "after_schema":
                 real(*args)
             raise _Crash(step)
 
-        setattr(self.table, method, crash)
+        setattr(table, method, crash)
         try:
             with pytest.raises(_Crash):
-                df = self.spark.createDataFrame(rows, SCHEMA)
+                df = self._df(rows)
                 if op == "overwrite":
-                    self.table.overwrite(df)
+                    table.overwrite(df)
                 else:
-                    self.table.merge(df, keys=["k"])
+                    table.merge(df, keys=["k"])
         finally:
-            delattr(self.table, method)
+            delattr(table, method)
 
     @rule(retain=st.integers(min_value=1, max_value=3))
     def vacuum(self, retain):
@@ -137,29 +178,36 @@ class StoreMachine(RuleBasedStateMachine):
         left = [e for e in os.listdir(os.path.join(self.root, "_versions")) if e.startswith(".")]
         assert all(e.startswith(f".stage-{cur:05d}-") for e in left), left
 
-    @rule(pick=st.integers(min_value=0, max_value=10_000))
-    def restore(self, pick):
+    @rule(h=handle_strategy, pick=st.integers(min_value=0, max_value=10_000))
+    def restore(self, h, pick):
         hist = self.table.history()
         version = hist[pick % len(hist)]
-        self.table.restore(version)
-        self.model = dict(self.versions[version - 1])
+        self.handles[h].restore(version)
+        columns, rows = self.versions[version - 1]
+        self.columns, self.model = columns, dict(rows)
         self._commit_model()
 
     @invariant()
     def table_matches_model(self):
         if not hasattr(self, "table"):
             return
-        got = sorted(tuple(r) for r in self.table.read().collect())
         want = sorted(self.model.values())
-        assert got == want, f"current: {got} != {want}"
+        for h, table in enumerate(self.handles):
+            df = table.read()
+            assert df.columns == self.columns, f"handle {h}: {df.columns} != {self.columns}"
+            got = sorted(tuple(r) for r in df.collect())
+            assert got == want, f"handle {h} current: {got} != {want}"
 
     @invariant()
     def every_retained_version_matches_history(self):
         if not hasattr(self, "table"):
             return
         for v in self.table.history():
-            got = sorted(tuple(r) for r in self.table.read(version=v).collect())
-            want = sorted(self.versions[v - 1].values())
+            columns, rows = self.versions[v - 1]
+            df = self.table.read(version=v)
+            assert df.columns == columns, f"v{v}: {df.columns} != {columns}"
+            got = sorted(tuple(r) for r in df.collect())
+            want = sorted(rows.values())
             assert got == want, f"v{v}: {got} != {want}"
 
 
