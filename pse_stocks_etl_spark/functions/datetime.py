@@ -14,13 +14,6 @@ from pyspark.sql import functions as F
 EPOCH_DATE = "1970-01-01"
 
 
-def parse_mixed_date(col: Column, fmts: tuple[str, ...] = ("yyyy-MM-dd", "MMM d, yyyy")) -> Column:
-    """F1: mixed-format date parse — the reference leans on pandas'
-    format sniffing for `CHART_DATE` (pse_edge.py:245-246); in Spark the
-    deterministic equivalent is a coalesce over try-parses."""
-    return F.coalesce(*[F.try_to_timestamp(col, F.lit(f)).cast("date") for f in fmts])
-
-
 def format_ts(col: Column) -> Column:
     """F1: canonical `%Y-%m-%d %H:%M:%S` rendering (pse_edge.py:114)."""
     return F.date_format(col, "yyyy-MM-dd HH:mm:ss")

@@ -58,12 +58,6 @@ def shingles_from_tokens(tk: Column, n: int = 3) -> Column:
     )
 
 
-def word_shingles(col: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of a text column. Convenience form;
-    hot paths should project tokens() once and use shingles_from_tokens."""
-    return shingles_from_tokens(tokens(col), n)
-
-
 def punct_count(col: Column) -> Column:
     return F.length(col) - F.length(F.regexp_replace(col, r"[\p{Punct}]", ""))
 

@@ -78,12 +78,6 @@ def argmax_dedup(
     return topk_per_group(df, keys, order, k=1)
 
 
-def exact_dedup(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
-    """Exact duplicate removal (dropDuplicates) — hash-shuffle on the
-    subset columns; Catalyst plans it as a partial+final hash aggregate."""
-    return df.dropDuplicates(list(subset) if subset else None)
-
-
 def connected_components_min_label(
     vertices: DataFrame,
     edges: DataFrame,

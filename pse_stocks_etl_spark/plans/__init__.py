@@ -64,10 +64,10 @@ _QUERY_MODULES = (
 #   python scripts/gen_driver_map.py --write
 # (the planner emits never-checked first, then the 50 queries whose
 # most-recent driver-green row is OLDEST, breaking ties by registry
-# order). New queries go straight to REGISTRY + the front of
-# _DRIVER_FIRST (they are never-checked by definition and outrank any
-# refresh); staging is only for overflow beyond the 25-query
-# never-checked bound. The rotation guards (tests/test_parity.py::
+# order). New queries go to REGISTRY and the front of _DRIVER_FIRST
+# (they are never-checked by definition and outrank any refresh); the
+# never-checked backlog beyond the window stays under 25 queries. The
+# rotation guards (tests/test_parity.py::
 # test_driver_window_covers_unverified_queries and
 # ::test_refresh_slots_are_the_stalest_greens) read the actual
 # CORRECTNESS files, never this prose.

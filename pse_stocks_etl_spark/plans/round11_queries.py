@@ -24,7 +24,7 @@ promo_revenue_share, top_revenue_suppliers, brand_size_supplier_counts,
 small_quantity_revenue, large_order_customers, brand_bracket_revenue,
 dominant_part_suppliers, sole_late_supplier_orders, idle_rich_customers).
 
-Plus staged additions (the driver backlog is at its 25-query bound):
+Plus these additions:
 `streaming_click_full_join`, the FULL OUTER member of the watermarked
 stream-stream interval-join matrix (inner r5-green, LEFT OUTER
 round-9) — its oracle spells both asymmetric NULL-emission horizons,
@@ -323,7 +323,7 @@ def dominant_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Streaming FULL OUTER interval join (staged: backlog is at its bound)
+# Streaming FULL OUTER interval join
 # --------------------------------------------------------------------------
 @register(
     "streaming_click_full_join",

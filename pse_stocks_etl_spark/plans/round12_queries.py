@@ -22,7 +22,7 @@ matrix.
   interval join — "which clicks converted" as a stream, without
   materializing the (click, purchase) pairs. Completes the streaming
   join matrix: inner (r5 driver-green), LEFT OUTER (round-9), FULL
-  OUTER (round-11 staged), and now semi — every join type Structured
+  OUTER (round-11), and now semi — every join type Structured
   Streaming supports for stream-stream equi+range predicates.
 - `docs_lsh_recall_report`: the dedup-lane recall scoreboard — LSH
   pairs vs the exact df-capped Jaccard baseline as a one-row pair-set
@@ -34,10 +34,8 @@ matrix.
   empty / wrong-dim / NaN / Inf vector counts in one scan, making the
   ANN lane's valid-vector assumption enforceable at ingest.
 
-All staged: the never-driver-checked registry backlog sits at its
-25-query bound (plans/__init__.py), so round-6 additions queue in
-plans/staging.py and get the same strict Arrow-level parity via
-tests/test_parity.py::test_staged_query_matches_oracle.
+Like every registry query they get strict Arrow-level DuckDB parity
+through tests/test_parity.py::test_query_matches_oracle.
 
 Reference parity: the reference's dedup surface is argmax row dedup in
 its sync loop (src/utils/pse_edge.py:259); these queries extend

@@ -1,6 +1,5 @@
-"""Round-13 queries (round-7 additions — staged: the driver backlog is
-at its 25-query bound, so these queue in plans/staging.py under the
-same strict Arrow-level parity gate until window slots free up).
+"""Round-13 queries (round-7 additions). Like every registry query they
+get strict Arrow-level DuckDB parity through tests/test_parity.py.
 
 Incremental-maintenance lane: `store_mv_refresh_increment` (the MV
 refreshes from merge_cdf's preimage/postimage algebra alone — never a

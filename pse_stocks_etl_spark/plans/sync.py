@@ -74,7 +74,6 @@ class PseDatasets:
     def price_fetch_plan(
         self,
         lookback_days: int = 0,
-        freshness_days: int = 1,
         today: str | Column | None = None,
     ) -> DataFrame:
         """A1 → J4 → F2/T2/T3 → P7: one row per symbol still needing data.
@@ -87,7 +86,7 @@ class PseDatasets:
             wm,
             "symbol",
             lookback_days=lookback_days,
-            freshness_days=freshness_days,
+            freshness_days=1,  # T3: never fetch today's possibly partial day
             today=today,
         )
         return pending_keys(windows)
@@ -95,11 +94,10 @@ class PseDatasets:
     def sync_prices(
         self,
         lookback_days: int = 0,
-        freshness_days: int = 1,
         today: str | Column | None = None,
     ) -> int:
         """Fact sync: fetch pending windows executor-side, dedup, merge."""
-        plan = self.price_fetch_plan(lookback_days, freshness_days, today)
+        plan = self.price_fetch_plan(lookback_days, today)
         connector = self.connector  # capture for executor closure
 
         def fetch(symbol: str, start: date, end: date):

@@ -38,9 +38,12 @@ DAILY_STOCK_PRICE_SCHEMA = T.StructType(
         T.StructField("low", T.DoubleType(), True),
         T.StructField("close", T.DoubleType(), True),
         T.StructField("extracted_at", T.TimestampNTZType(), True),  # see COMPANY_SCHEMA
-
     ]
 )
+
+# Column order of the connector's pandas frames (sources/pse_edge*.py).
+COMPANY_COLUMNS = COMPANY_SCHEMA.fieldNames()
+PRICE_COLUMNS = DAILY_STOCK_PRICE_SCHEMA.fieldNames()
 
 # The driver's synthetic star schema (TESTDATA.md). Declared explicitly so
 # csv/json/streaming readers never fall back to inferSchema (the reference's

@@ -222,9 +222,3 @@ def read_jdbc(
     for k, v in options.items():
         reader = reader.option(k, v)
     return reader.load()
-
-
-def empty_relation(spark: SparkSession, schema: T.StructType) -> DataFrame:
-    """Typed empty DataFrame — the reference's empty-result short-circuit
-    (pse_edge.py:239-240) and empty-table init (spark_deltalake_sync.py:125-128)."""
-    return spark.createDataFrame([], schema)

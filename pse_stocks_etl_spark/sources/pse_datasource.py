@@ -16,9 +16,14 @@ network); the real client would drop into `_fetch` unchanged.
 
 from __future__ import annotations
 
-from datetime import date
+from datetime import date, timedelta
 
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceReader,
+    DataSourceStreamReader,
+    InputPartition,
+)
 
 PRICE_DDL = (
     "symbol string, date date, open double, high double, low double, "
@@ -35,9 +40,40 @@ class _SymbolPartition(InputPartition):
         self.end = end
 
 
+def _read_partition(partition: _SymbolPartition):
+    """Rows of one symbol's [start, end] window, shared by the batch and
+    the stream reader. Runs on executors, so the connector is imported
+    here: the pickled reader stays free of Spark/driver state."""
+    from .pse_edge import FakePseEdge
+
+    fake = FakePseEdge([partition.symbol])
+    pdf = fake.get_stock_data(
+        partition.symbol,
+        date.fromisoformat(partition.start),
+        date.fromisoformat(partition.end),
+    )
+    for row in pdf.itertuples(index=False):
+        yield (
+            row.symbol,
+            row.date,
+            row.open,
+            row.high,
+            row.low,
+            row.close,
+            row.extracted_at.to_pydatetime(),
+        )
+
+
+def _offset_date(offset: dict) -> date:
+    """Stream offsets are plain dicts ({"cursor": iso_date}), JSON-round-
+    trippable as the API requires."""
+    return date.fromisoformat(offset["cursor"])
+
+
 class PseEdgeDataSource(DataSource):
     """`spark.read.format("pse_edge_fake").option("symbols", "JFC,SM")
-    .option("start", "2024-01-01").option("end", "2024-01-31").load()`"""
+    .option("start", "2024-01-01").option("end", "2024-01-31").load()`;
+    the same format name serves `spark.readStream`."""
 
     @classmethod
     def name(cls) -> str:
@@ -48,6 +84,9 @@ class PseEdgeDataSource(DataSource):
 
     def reader(self, schema) -> "PseEdgeReader":
         return PseEdgeReader(self.options)
+
+    def streamReader(self, schema) -> "PseEdgeStreamReader":
+        return PseEdgeStreamReader(self.options)
 
 
 class PseEdgeReader(DataSourceReader):
@@ -65,26 +104,7 @@ class PseEdgeReader(DataSourceReader):
         return [_SymbolPartition(s, self.start, self.end) for s in self.symbols]
 
     def read(self, partition: _SymbolPartition):
-        # Import inside read(): this method runs on executors; keep the
-        # pickled reader free of Spark/driver state.
-        from .pse_edge import FakePseEdge
-
-        fake = FakePseEdge([partition.symbol])
-        pdf = fake.get_stock_data(
-            partition.symbol,
-            date.fromisoformat(partition.start),
-            date.fromisoformat(partition.end),
-        )
-        for row in pdf.itertuples(index=False):
-            yield (
-                row.symbol,
-                row.date,
-                row.open,
-                row.high,
-                row.low,
-                row.close,
-                row.extracted_at.to_pydatetime(),
-            )
+        return _read_partition(partition)
 
 
 def register(spark) -> None:
@@ -95,18 +115,6 @@ def register(spark) -> None:
 # --------------------------------------------------------------------------
 # Streaming side of the same source (PySpark 4 DataSourceStreamReader)
 # --------------------------------------------------------------------------
-class _StreamOffset:
-    """Offsets are plain dicts ({"cursor": iso_date}) — JSON-round-
-    trippable, as the API requires; this class only holds helpers."""
-
-    @staticmethod
-    def cursor(offset: dict) -> "date":
-        return date.fromisoformat(offset["cursor"])
-
-
-from pyspark.sql.datasource import DataSourceStreamReader  # noqa: E402
-
-
 class PseEdgeStreamReader(DataSourceStreamReader):
     """DataSourceStreamReader: replays the exchange window as date-
     range micro-batches. The offset is the REPLAY CURSOR (next unread
@@ -136,8 +144,6 @@ class PseEdgeStreamReader(DataSourceStreamReader):
         # maxFilesPerTrigger analog for this source, and what lets the
         # tests pin multi-batch behavior (verified: 5 batches for a
         # 31-day window at 7 days/batch).
-        from datetime import timedelta
-
         cur = getattr(self, "_cursor", date.fromisoformat(self.start))
         end = date.fromisoformat(self.end)
         nxt = min(cur + timedelta(days=self.days_per_batch), end + timedelta(days=1))
@@ -145,10 +151,8 @@ class PseEdgeStreamReader(DataSourceStreamReader):
         return {"cursor": nxt.isoformat()}
 
     def partitions(self, start: dict, end: dict) -> list:
-        from datetime import timedelta
-
-        lo = _StreamOffset.cursor(start)
-        hi = _StreamOffset.cursor(end)
+        lo = _offset_date(start)
+        hi = _offset_date(end)
         # Recovery path: replayed offsets also pull the pacing cursor
         # forward (see commit()) so post-restart planning resumes
         # after them instead of re-reading.
@@ -162,24 +166,7 @@ class PseEdgeStreamReader(DataSourceStreamReader):
         ]
 
     def read(self, partition: _SymbolPartition):
-        from .pse_edge import FakePseEdge
-
-        fake = FakePseEdge([partition.symbol])
-        pdf = fake.get_stock_data(
-            partition.symbol,
-            date.fromisoformat(partition.start),
-            date.fromisoformat(partition.end),
-        )
-        for row in pdf.itertuples(index=False):
-            yield (
-                row.symbol,
-                row.date,
-                row.open,
-                row.high,
-                row.low,
-                row.close,
-                row.extracted_at.to_pydatetime(),
-            )
+        return _read_partition(partition)
 
     def commit(self, end: dict) -> None:
         # Fast-forward the pacing cursor to the committed offset. This
@@ -191,18 +178,10 @@ class PseEdgeStreamReader(DataSourceStreamReader):
         # offset log and replays already-committed windows (observed:
         # 144 duplicate rows before this guard; pinned by
         # tests/test_round13.py::test_stream_datasource_restart).
-        self._fast_forward(_StreamOffset.cursor(end))
+        self._fast_forward(_offset_date(end))
 
     def _fast_forward(self, seen: "date") -> None:
         cur = getattr(self, "_cursor", date.fromisoformat(self.start))
         if seen > cur:
             self._cursor = seen
 
-
-def _stream_reader(self, schema):  # noqa: ANN001
-    return PseEdgeStreamReader(self.options)
-
-
-# Attach the streaming capability to the same DataSource class so ONE
-# format name serves spark.read and spark.readStream.
-PseEdgeDataSource.streamReader = _stream_reader

@@ -32,24 +32,8 @@ from datetime import date, timedelta
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
 
-COMPANY_COLUMNS = ["symbol", "company_name", "sector", "subsector", "listing_date", "extracted_at"]
-PRICE_COLUMNS = ["symbol", "date", "open", "high", "low", "close", "extracted_at"]
-
-FETCH_RESULT_SCHEMA = T.StructType(
-    [
-        T.StructField("symbol", T.StringType(), False),
-        T.StructField("date", T.DateType(), False),
-        T.StructField("open", T.DoubleType(), True),
-        T.StructField("high", T.DoubleType(), True),
-        T.StructField("low", T.DoubleType(), True),
-        T.StructField("close", T.DoubleType(), True),
-        # NTZ — wall-clock extract stamp, session-tz-independent (the
-        # same rule as the store schemas, schemas.py)
-        T.StructField("extracted_at", T.TimestampNTZType(), True),
-    ]
-)
+from ..schemas import COMPANY_COLUMNS, DAILY_STOCK_PRICE_SCHEMA, PRICE_COLUMNS
 
 
 class UnknownSymbolError(Exception):
@@ -321,5 +305,5 @@ def distributed_fetch(
     n = max(windows_df.sparkSession.sparkContext.defaultParallelism, 1)
     return (
         windows_df.repartition(n, key_col)
-        .mapInPandas(fetch_partition, schema=FETCH_RESULT_SCHEMA)
+        .mapInPandas(fetch_partition, schema=DAILY_STOCK_PRICE_SCHEMA)
     )

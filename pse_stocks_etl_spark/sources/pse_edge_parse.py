@@ -27,8 +27,7 @@ from html.parser import HTMLParser
 
 import pandas as pd
 
-COMPANY_COLUMNS = ["symbol", "company_name", "sector", "subsector", "listing_date", "extracted_at"]
-PRICE_COLUMNS = ["symbol", "date", "open", "high", "low", "close", "extracted_at"]
+from ..schemas import COMPANY_COLUMNS, PRICE_COLUMNS
 
 # Column headers of the PSE Edge company-directory results table, in
 # page order (reference pse_edge.py:103-110 renames exactly these).

@@ -70,6 +70,8 @@ _VERSION_RE = re.compile(r"^v\d{5,}$")
 # Uncommitted dirs: a writer's staging dir (named after its base), trash.
 _STAGE_RE = re.compile(r"^\.stage-(\d+)-")
 _TRASH = ".trash-"
+# optimize's Z-order: each cluster column is bucketed into 2^4 quantile ranks.
+_ZORDER_BITS = 4
 
 
 def _violation_message(name: str, predicate: str) -> str:
@@ -439,7 +441,6 @@ class ParquetTable:
     def optimize(
         self,
         cluster_by: Sequence[str],
-        zorder_bits: int = 4,
         target_files: int | None = None,
     ) -> None:
         """K9 companion: rewrite the current version clustered by
@@ -449,7 +450,7 @@ class ParquetTable:
 
         One cluster column → range-partition + sort (lexicographic is
         optimal for a single key). Multiple columns → Z-ORDER: each
-        column is quantile-bucketed into 2^zorder_bits ranks (boundaries
+        column is quantile-bucketed into 2^_ZORDER_BITS ranks (boundaries
         from approxQuantile — a bounded driver-side list, never data),
         the rank bits are Morton-interleaved into one z-value, and files
         are range-partitioned + sorted by it. Lexicographic multi-column
@@ -462,7 +463,7 @@ class ParquetTable:
         base = self.current_version()
         df = self._scan(base)
         if len(cluster_by) >= 2:
-            z = self._zvalue(df, cluster_by, zorder_bits)
+            z = self._zvalue(df, cluster_by)
             df = df.withColumn("__z", z)
             if self.partition_by:
                 df = df.sortWithinPartitions("__z")
@@ -481,13 +482,14 @@ class ParquetTable:
         self._commit(df, expected_version=base)
 
     @staticmethod
-    def _zvalue(df: DataFrame, cluster_by: Sequence[str], bits: int) -> Column:
+    def _zvalue(df: DataFrame, cluster_by: Sequence[str]) -> Column:
         """Morton z-value over quantile-rank buckets of `cluster_by`.
 
         Numeric columns bucket directly; date columns via unix_date.
         NULLs land in bucket 0 (nulls-first, same as Spark's sort
         default). Quantile (not uniform) buckets keep file ranges
         balanced under skew."""
+        bits = _ZORDER_BITS
         n_cols = len(cluster_by)
         n_bounds = (1 << bits) - 1
         probs = [(i + 1) / (1 << bits) for i in range(n_bounds)]

@@ -27,8 +27,6 @@ sys.path.insert(0, REPO)
 import duckdb  # noqa: E402
 
 from pse_stocks_etl_spark import plans  # noqa: E402
-from pse_stocks_etl_spark.plans import round9_queries  # noqa: E402,F401
-from pse_stocks_etl_spark.plans.staging import STAGING  # noqa: E402
 from pse_stocks_etl_spark.schemas import TESTDATA_TABLES  # noqa: E402
 from pse_stocks_etl_spark.session import get_spark  # noqa: E402
 from pse_stocks_etl_spark.testing import arrow_summary  # noqa: E402
@@ -53,7 +51,7 @@ def main() -> int:
     con = fresh_con()
     n_run = 0
     failures = []
-    todo = {**plans.REGISTRY, **STAGING}  # staged queries: same gate
+    todo = plans.REGISTRY
     for name, q in todo.items():
         if only and name not in only:
             continue

@@ -6,14 +6,10 @@ of re-derived by hand each round.
 Policy (the rotation contract tests/test_parity.py enforces):
   1. every registry query with NO hash-green driver row, in current
      registry order (the declared queue order), fills the window first;
-  2. staged queries (plans/staging.py) are listed for promotion
-     (stage() -> register()) and take the slots after the registry
-     backlog — the planner prints them separately because promotion is
-     a code edit, not a reorder;
-  3. remaining window slots refill with the STALEST greens (oldest
+  2. remaining window slots refill with the STALEST greens (oldest
      round of their last hash-green row) — beyond-window rot is where
      round 4's regression hid;
-  4. overflow (never-checked beyond 50) must stay under 25 and is
+  3. overflow (never-checked beyond 50) must stay under 25 and is
      printed as the declared next-window queue.
 
 Usage:
@@ -38,10 +34,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
-def compute_plan(window: int) -> tuple[list[str], list[str], dict]:
-    """Returns (ordered names incl. overflow, staged-to-promote, info)."""
+def compute_plan(window: int) -> tuple[list[str], dict]:
+    """Returns (ordered names incl. overflow, info)."""
     from pse_stocks_etl_spark import plans
-    from pse_stocks_etl_spark.plans.staging import STAGING
 
     last_green: dict[str, int] = {}
     for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
@@ -55,23 +50,15 @@ def compute_plan(window: int) -> tuple[list[str], list[str], dict]:
     stale = sorted(
         (n for n in names if n in last_green), key=lambda n: (last_green[n], n)
     )
-    staged = list(STAGING)
-    head = never + staged
-    refill = [n for n in stale if n not in head][: max(0, window - len(head))]
-    plan = head + refill
-    info = {"never": len(never), "staged": len(staged), "refill": len(refill)}
-    return plan, staged, info
+    refill = stale[: max(0, window - len(never))]
+    plan = never + refill
+    info = {"never": len(never), "refill": len(refill)}
+    return plan, info
 
 
 def apply_plan(window: int) -> int:
     """Rewrite plans/__init__.py's _DRIVER_FIRST list in place."""
-    plan, staged, info = compute_plan(window)
-    if staged:
-        print(
-            "refusing --apply while queries sit in plans/staging.py — "
-            f"promote them first (stage -> register): {staged}"
-        )
-        return 1
+    plan, info = compute_plan(window)
     overflow = plan[window:]
     lines = ["_DRIVER_FIRST = ["]
     lines += [
@@ -112,12 +99,9 @@ def main() -> int:
     if apply_mode:
         return apply_plan(window)
 
-    plan, staged, info = compute_plan(window)
+    plan, info = compute_plan(window)
     print(f"# window={window}; never-checked registry={info['never']}; "
-          f"staged-to-promote={info['staged']}; stale refill={info['refill']}")
-    print("# -- promote these from plans/staging.py (stage -> register):")
-    for n in staged:
-        print(f"#    {n}")
+          f"stale refill={info['refill']}")
     print("_DRIVER_FIRST = [")
     for n in plan[:window]:
         print(f'    "{n}",')

@@ -125,9 +125,7 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from pse_stocks_etl_spark import plans
-    from pse_stocks_etl_spark.plans import round9_queries  # noqa: F401 (staging)
     from pse_stocks_etl_spark.plans.llm_queries import clear_working_set_caches
-    from pse_stocks_etl_spark.plans.staging import STAGING
     from pse_stocks_etl_spark.session import get_spark
 
     big_dir = replicate(sf_dir, table, factor, perturb=perturb)
@@ -140,8 +138,7 @@ def main() -> int:
             for _ in range(2):
                 clear_working_set_caches()
                 t0 = time.perf_counter()
-                fn = (plans.REGISTRY[name].fn if name in plans.REGISTRY
-                      else STAGING[name].fn)
+                fn = plans.REGISTRY[name].fn
                 # noop write = FORCED FULL EVALUATION. count() let
                 # Catalyst prune provably row-preserving subtrees (a
                 # left join against a unique-keyed side) and reported a

@@ -91,7 +91,6 @@ def main() -> int:
 
     from pse_stocks_etl_spark import plans
     from pse_stocks_etl_spark.plans.llm_queries import clear_working_set_caches
-    from pse_stocks_etl_spark.plans.staging import STAGING
     from pse_stocks_etl_spark.session import get_spark
 
     uni, hot = build(sf_dir, table, factor)
@@ -100,7 +99,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     for label, d in [("uniform", uni), ("hot-key", hot)]:
         for name in names:
-            fn = (plans.REGISTRY[name].fn if name in plans.REGISTRY else STAGING[name].fn)
+            fn = plans.REGISTRY[name].fn
             best = None
             for _ in range(2):
                 clear_working_set_caches()

@@ -85,13 +85,11 @@ def test_no_oracle_uses_ambiguous_dow():
     import re
 
     from pse_stocks_etl_spark import plans
-    from pse_stocks_etl_spark.plans.staging import STAGING
 
     bad = re.compile(r"(?<!iso)\bdow\b|dayofweek", re.I)
     offenders = [
         name
-        for reg in (plans.REGISTRY, STAGING)
-        for name, q in reg.items()
+        for name, q in plans.REGISTRY.items()
         if q.oracle and bad.search(q.oracle)
     ]
     assert not offenders, offenders

@@ -129,18 +129,3 @@ def test_driver_map_matches_correctness_files():
         f"window flags drifted: missing={sorted(window - flagged)[:5]}, "
         f"ghost={sorted(flagged - window)[:5]}"
     )
-
-
-def test_coverage_staging_table_matches_staging_registry():
-    """The COVERAGE.md staged-queries table must list exactly the
-    STAGING registry (same no-ghost/no-missing contract as the driver
-    map)."""
-    from pse_stocks_etl_spark.plans import round9_queries  # noqa: F401
-    from pse_stocks_etl_spark.plans.staging import STAGING
-
-    text = open(os.path.join(REPO, "COVERAGE.md")).read()
-    section = text.split("## Staged queries", 1)[1].split("## Driver-verification", 1)[0]
-    mapped = set(re.findall(r"^\| `([a-z0-9_]+)` \|", section, re.MULTILINE))
-    assert mapped == set(STAGING), (
-        f"missing: {sorted(set(STAGING) - mapped)}; ghosts: {sorted(mapped - set(STAGING))}"
-    )

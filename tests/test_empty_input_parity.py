@@ -1,9 +1,9 @@
-"""Fourth hostility matrix: EVERY oracle-backed query (registry AND
-staging) on a dataset where every table has ZERO rows but the full
-schema. Empty input is classic engine-divergence territory — global
-aggregates emit one NULL-ish row vs none, SUM over empty is NULL
-where COUNT(*)-COUNT(col) is 0 (the table_profile find that seeded
-this matrix), windows and streaming watermarks never fire — and it is
+"""Fourth hostility matrix: EVERY oracle-backed registry query on a
+dataset where every table has ZERO rows but the full schema. Empty
+input is classic engine-divergence territory — global aggregates emit
+one NULL-ish row vs none, SUM over empty is NULL where
+COUNT(*)-COUNT(col) is 0 (the table_profile find that seeded this
+matrix), windows and streaming watermarks never fire — and it is
 exactly what a pipeline sees on day one, on an empty partition, or
 after an aggressive filter. Selection is the whole oracle registry,
 so every new query joins automatically."""
@@ -17,18 +17,13 @@ import pyarrow.parquet as pq
 import pytest
 
 from pse_stocks_etl_spark import plans
-from pse_stocks_etl_spark.plans import round9_queries  # noqa: F401
-from pse_stocks_etl_spark.plans.staging import STAGING
 from pse_stocks_etl_spark.schemas import TESTDATA_TABLES
 from pse_stocks_etl_spark.testing import compare_overlapped
 
 from conftest import SF_DIR
 
 ALL = sorted(
-    (name, q)
-    for reg in (plans.REGISTRY, STAGING)
-    for name, q in reg.items()
-    if q.oracle is not None
+    (name, q) for name, q in plans.REGISTRY.items() if q.oracle is not None
 )
 
 

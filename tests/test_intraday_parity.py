@@ -27,8 +27,6 @@ import pyarrow.parquet as pq
 import pytest
 
 from pse_stocks_etl_spark import plans
-from pse_stocks_etl_spark.plans import round9_queries  # noqa: F401
-from pse_stocks_etl_spark.plans.staging import STAGING
 from pse_stocks_etl_spark.schemas import TESTDATA_TABLES
 
 from conftest import SF_DIR
@@ -42,12 +40,11 @@ def _tables_used(q):
 
 def _matrix_queries():
     out = []
-    for reg in (plans.REGISTRY, STAGING):
-        for name, q in reg.items():
-            if q.oracle is None:
-                continue
-            if _tables_used(q) & {"orders", "lineitem"}:
-                out.append((name, q))
+    for name, q in plans.REGISTRY.items():
+        if q.oracle is None:
+            continue
+        if _tables_used(q) & {"orders", "lineitem"}:
+            out.append((name, q))
     return out
 
 

@@ -22,7 +22,7 @@ from conftest import SF_DIR
 def index_table(spark, tmp_path_factory):
     """Build the IVF-PQ index ONCE: codes + cell for every vector,
     written partitioned by cell (the build half of emb_ann_ivfpq)."""
-    # Reuse the staged query's internals by materializing its candidate
+    # Reuse the query's internals by materializing its candidate
     # frame: re-derive assignment + codes the same way the query does.
     from pse_stocks_etl_spark.functions.vectors import to_double_array
     from pse_stocks_etl_spark.operators.dedup import topk_per_group

@@ -1,5 +1,5 @@
-"""Every events-only query (registry AND staging), Spark vs DuckDB, on
-a feed containing NULL event_type / value / props / user_id rows — the
+"""Every events-only registry query, Spark vs DuckDB, on a
+feed containing NULL event_type / value / props / user_id rows — the
 exact divergence class the r4 ADVICE found (Spark collect_set drops
 NULLs, DuckDB list(DISTINCT) counts them), swept mechanically instead
 of patched query-by-query. Event TIME stays non-null: ts is the clock
@@ -20,21 +20,18 @@ import pyarrow.parquet as pq
 import pytest
 
 from pse_stocks_etl_spark import plans
-from pse_stocks_etl_spark.plans import round9_queries  # noqa: F401
-from pse_stocks_etl_spark.plans.staging import STAGING
 from pse_stocks_etl_spark.schemas import TESTDATA_TABLES
 from pse_stocks_etl_spark.testing import compare_overlapped
 
 
 def _events_only_queries():
     out = []
-    for reg in (plans.REGISTRY, STAGING):
-        for name, q in reg.items():
-            if q.oracle is None:
-                continue
-            used = {t for t in TESTDATA_TABLES if re.search(rf"\b{t}\b", q.oracle)}
-            if used == {"events"}:
-                out.append((name, q))
+    for name, q in plans.REGISTRY.items():
+        if q.oracle is None:
+            continue
+        used = {t for t in TESTDATA_TABLES if re.search(rf"\b{t}\b", q.oracle)}
+        if used == {"events"}:
+            out.append((name, q))
     return out
 
 EVENTS_ONLY = _events_only_queries()

@@ -1,5 +1,5 @@
-"""Every documents-only query (registry AND staging), Spark vs DuckDB,
-on a corpus CONTAINING A NULL text row. The testdata has no NULL texts
+"""Every documents-only registry query, Spark vs DuckDB, on a
+corpus CONTAINING A NULL text row. The testdata has no NULL texts
 today — but it has changed between rounds before (the r4 timestamp-unit
 collapse), and the r4 ADVICE found exactly this class of latent
 divergence (Spark collect_set drops NULLs, DuckDB lists count them).
@@ -19,21 +19,18 @@ import pyarrow.parquet as pq
 import pytest
 
 from pse_stocks_etl_spark import plans
-from pse_stocks_etl_spark.plans import round9_queries  # noqa: F401
-from pse_stocks_etl_spark.plans.staging import STAGING
 from pse_stocks_etl_spark.schemas import TESTDATA_TABLES
 from pse_stocks_etl_spark.testing import compare_overlapped
 
 
 def _docs_only_queries():
     out = []
-    for reg in (plans.REGISTRY, STAGING):
-        for name, q in reg.items():
-            if q.oracle is None:
-                continue
-            used = {t for t in TESTDATA_TABLES if re.search(rf"\b{t}\b", q.oracle)}
-            if used == {"documents"}:
-                out.append((name, q))
+    for name, q in plans.REGISTRY.items():
+        if q.oracle is None:
+            continue
+        used = {t for t in TESTDATA_TABLES if re.search(rf"\b{t}\b", q.oracle)}
+        if used == {"documents"}:
+            out.append((name, q))
     return out
 
 DOCS_ONLY = _docs_only_queries()

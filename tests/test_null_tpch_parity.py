@@ -23,8 +23,6 @@ import pyarrow.parquet as pq
 import pytest
 
 from pse_stocks_etl_spark import plans
-from pse_stocks_etl_spark.plans import round9_queries  # noqa: F401
-from pse_stocks_etl_spark.plans.staging import STAGING
 from pse_stocks_etl_spark.schemas import TESTDATA_TABLES
 
 from conftest import SF_DIR
@@ -36,13 +34,12 @@ def _tables_used(q):
 
 def _matrix_queries():
     out = []
-    for reg in (plans.REGISTRY, STAGING):
-        for name, q in reg.items():
-            if q.oracle is None:
-                continue
-            used = _tables_used(q)
-            if used not in ({"documents"}, {"events"}):
-                out.append((name, q))
+    for name, q in plans.REGISTRY.items():
+        if q.oracle is None:
+            continue
+        used = _tables_used(q)
+        if used not in ({"documents"}, {"events"}):
+            out.append((name, q))
     return out
 
 MATRIX = _matrix_queries()
@@ -142,13 +139,12 @@ def test_matrices_partition_the_registry():
     """docs-only + events-only + this matrix = every oracle query,
     exactly once."""
     all_named = set()
-    for reg in (plans.REGISTRY, STAGING):
-        for name, q in reg.items():
-            if q.oracle is not None:
-                all_named.add(name)
-    docs = {n for reg in (plans.REGISTRY, STAGING) for n, q in reg.items()
+    for name, q in plans.REGISTRY.items():
+        if q.oracle is not None:
+            all_named.add(name)
+    docs = {n for n, q in plans.REGISTRY.items()
             if q.oracle and _tables_used(q) == {"documents"}}
-    events = {n for reg in (plans.REGISTRY, STAGING) for n, q in reg.items()
+    events = {n for n, q in plans.REGISTRY.items()
               if q.oracle and _tables_used(q) == {"events"}}
     here = {n for n, _ in MATRIX}
     assert docs | events | here == all_named

@@ -35,23 +35,6 @@ def test_query_matches_oracle(spark, sf_dir, duck, name):
     assert not problems, f"{name}: {problems}"
 
 
-from pse_stocks_etl_spark.plans.staging import STAGING
-
-
-@pytest.mark.parametrize("name", sorted(STAGING))
-def test_staged_query_matches_oracle(spark, sf_dir, duck, name):
-    """Staged queries (awaiting a driver slot) get the exact same
-    strict parity gate as registered ones — the round-9 staging module
-    carried its own copy of this loop; this generic one survives the
-    queue emptying and refilling."""
-    q = STAGING[name]
-    if q.oracle is None:
-        assert q.fn(spark, sf_dir).count() >= 0
-        return
-    problems = strict_compare_overlapped(lambda: q.fn(spark, sf_dir), duck, q.oracle)
-    assert not problems, f"{name}: {problems}"
-
-
 def test_entry_smoke(spark):
     import __spark_entry__ as e
 

@@ -11,9 +11,8 @@ import os
 
 import pytest
 
+from pse_stocks_etl_spark.schemas import COMPANY_SCHEMA, DAILY_STOCK_PRICE_SCHEMA
 from pse_stocks_etl_spark.sources.pse_edge_parse import (
-    COMPANY_COLUMNS,
-    PRICE_COLUMNS,
     filter_autocomplete,
     normalize_companies,
     parse_chart_data,
@@ -46,12 +45,12 @@ def test_directory_pagination_concat_and_normalize():
     rows2, _ = parse_directory_page(_read("company_search_page2.html"))
     assert n == 2
     df = normalize_companies(rows1 + rows2, "Tue, 01 Mar 2022 12:00:00 GMT")
-    assert df.columns.tolist() == COMPANY_COLUMNS
+    assert df.columns.tolist() == COMPANY_SCHEMA.fieldNames()
     assert df["symbol"].tolist() == ["JFC", "SM", "ALI"]
     assert df.loc[0, "listing_date"] == dt.date(1993, 7, 14)  # golden
     assert df.loc[0, "extracted_at"] == dt.datetime(2022, 3, 1, 12, 0, 0)
     # no-match edge: zero rows still yields the full column contract
-    assert normalize_companies([], "").columns.tolist() == COMPANY_COLUMNS
+    assert normalize_companies([], "").columns.tolist() == COMPANY_SCHEMA.fieldNames()
 
 
 def test_autocomplete_exact_match_filter():
@@ -86,7 +85,7 @@ def test_chart_data_golden_row_and_max_close_dedup():
     df = parse_chart_data(
         _read("chart_data_jfc.json"), "JFC", "Tue, 01 Mar 2022 16:00:00 GMT"
     )
-    assert df.columns.tolist() == PRICE_COLUMNS
+    assert df.columns.tolist() == DAILY_STOCK_PRICE_SCHEMA.fieldNames()
     # duplicate CHART_DATE rows: the max-close row wins (reference :259)
     assert len(df) == 2
     r = df[df["date"] == dt.date(2022, 3, 1)].iloc[0]
@@ -98,7 +97,7 @@ def test_chart_data_golden_row_and_max_close_dedup():
 
 def test_chart_data_empty_short_circuit():
     df = parse_chart_data('{"chartData": []}', "JFC", "")
-    assert df.columns.tolist() == PRICE_COLUMNS
+    assert df.columns.tolist() == DAILY_STOCK_PRICE_SCHEMA.fieldNames()
     assert len(df) == 0
 
 
@@ -158,7 +157,7 @@ def test_client_get_listed_companies_hermetic():
     c = _client()
     df = c.get_listed_companies()
     # both recorded pages fetched and concatenated, then normalized
-    assert df.columns.tolist() == COMPANY_COLUMNS
+    assert df.columns.tolist() == COMPANY_SCHEMA.fieldNames()
     assert df["symbol"].tolist() == ["JFC", "SM", "ALI"]
     assert df.loc[0, "listing_date"] == dt.date(1993, 7, 14)
     posts = [u for m, u in c.transport.calls if m == "POST"]
@@ -177,7 +176,7 @@ def test_client_get_company_info_hermetic():
 def test_client_get_stock_data_hermetic():
     c = _client()
     df = c.get_stock_data("JFC", dt.date(2022, 3, 1), dt.date(2022, 3, 1))
-    assert df.columns.tolist() == PRICE_COLUMNS
+    assert df.columns.tolist() == DAILY_STOCK_PRICE_SCHEMA.fieldNames()
     r = df.iloc[0]
     # the reference's exact golden OHLC (test_pse_edge.py:60-75)
     assert (r["open"], r["high"], r["low"], r["close"]) == (241.4, 245.0, 240.0, 240.0)

@@ -3,7 +3,7 @@ shape its docstring claims (one hash-only corpus exchange, broadcast
 join-back, zero Python), and the LEFT SEMI stream-stream join must
 emit each matched click exactly once — including when the match
 arrives in a later microbatch, and when MULTIPLE purchases match.
-Value parity runs through tests/test_parity.py like every staged
+Value parity runs through tests/test_parity.py like every registry
 query; this file pins what the oracle cannot see."""
 
 from __future__ import annotations

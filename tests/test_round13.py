@@ -658,7 +658,7 @@ def test_late_drop_calibration_fixture(spark, tmp_path_factory):
 
 
 def test_late_drop_matches_oracle_under_shuffled_ids(spark, tmp_path_factory):
-    """Random (id, ts) assignments: the staged query must match its own
+    """Random (id, ts) assignments: the query must match its own
     DuckDB oracle on fixtures far denser in late rows than the
     testdata — every id permutation is a different arrival schedule."""
     import datetime as dt

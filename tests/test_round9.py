@@ -1,18 +1,11 @@
-"""Round-9 queries were PROMOTED from plans/staging.py to the registry
-in round 6 (the rotation recipe plans/__init__.py describes): they now
-get strict DuckDB parity through tests/test_parity.py like every other
-registry query. What remains here is the staging-queue contract:
-staging is a queue for rounds where the driver-verification backlog is
-at its 25-query bound, not a parking lot — while the backlog has room,
-new queries go straight to REGISTRY and staging stays empty."""
+"""Round-9 queries are registry queries (since round 6): they get
+strict DuckDB parity through tests/test_parity.py like every other
+registry query. What remains here is the check that none of them fell
+out of the registry."""
 
 from __future__ import annotations
 
 from pse_stocks_etl_spark import plans
-from pse_stocks_etl_spark.plans.staging import STAGING
-
-# Importing the module populates REGISTRY (promotion happened in r6).
-from pse_stocks_etl_spark.plans import round9_queries  # noqa: F401
 
 ROUND9_NAMES = [
     "customer_order_distribution",
@@ -41,30 +34,3 @@ ROUND9_NAMES = [
 def test_round9_queries_promoted_to_registry():
     missing = [n for n in ROUND9_NAMES if n not in plans.REGISTRY]
     assert not missing, f"round-9 queries fell out of the registry: {missing}"
-
-
-def test_staging_stays_empty_while_backlog_has_room():
-    """Staging exists ONLY for rounds where the driver-verification
-    backlog is at its 25-query bound. The round-6 promotion drained it;
-    while the rotation guard (tests/test_parity.py) shows room, new
-    queries must register directly — this test turns red if staging is
-    used as a parking lot."""
-    import glob
-    import json
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    hash_green: set[str] = set()
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        for name, rec in json.load(open(path)).items():
-            if rec.get("hash_match") is True:
-                hash_green.add(name)
-    names = list(plans.REGISTRY)
-    window = set(names[:50])
-    backlog = len(set(names) - hash_green - window)
-    room = 25 - backlog
-    assert len(STAGING) == 0 or room < len(STAGING), (
-        f"driver backlog has room for {room} more unverified queries but "
-        f"{len(STAGING)} sit in staging — promote them to REGISTRY and "
-        "append to _DRIVER_FIRST (see plans/staging.py)"
-    )

@@ -1,5 +1,5 @@
-"""Plan-shape guards for the round-9 queries (promoted from staging to
-the registry in round 6): the physical plan properties that make each
+"""Plan-shape guards for the round-9 queries (in the registry since
+round 6): the physical plan properties that make each
 query scale-safe must survive refactors (same pattern as
 tests/test_round8.py's guards)."""
 

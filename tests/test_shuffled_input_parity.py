@@ -25,8 +25,6 @@ import pyarrow.parquet as pq
 import pytest
 
 from pse_stocks_etl_spark import plans
-from pse_stocks_etl_spark.plans import round9_queries  # noqa: F401
-from pse_stocks_etl_spark.plans.staging import STAGING
 from pse_stocks_etl_spark.schemas import TESTDATA_TABLES
 
 from conftest import SF_DIR
@@ -34,12 +32,11 @@ from conftest import SF_DIR
 
 def _matrix_queries():
     out = []
-    for reg in (plans.REGISTRY, STAGING):
-        for name, q in reg.items():
-            if q.oracle is not None and "OVER (" in q.oracle.upper().replace(
-                "OVER(", "OVER ("
-            ):
-                out.append((name, q))
+    for name, q in plans.REGISTRY.items():
+        if q.oracle is not None and "OVER (" in q.oracle.upper().replace(
+            "OVER(", "OVER ("
+        ):
+            out.append((name, q))
     return out
 
 

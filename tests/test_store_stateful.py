@@ -14,7 +14,7 @@ from __future__ import annotations
 import os
 
 import pytest
-from hypothesis import HealthCheck, settings
+from hypothesis import HealthCheck, Phase, settings
 from hypothesis import strategies as st
 from hypothesis.stateful import RuleBasedStateMachine, initialize, invariant, rule
 
@@ -219,6 +219,9 @@ def test_store_operations_compose(spark):
         max_examples=3,
         stateful_step_count=8,
         deadline=None,
+        # No shrink phase: every shrink candidate re-runs its Spark steps,
+        # so a failing run would cost minutes; it is reported unshrunk.
+        phases=(Phase.explicit, Phase.reuse, Phase.generate),
         suppress_health_check=list(HealthCheck),
     )
     instance = machine_test()

@@ -104,12 +104,10 @@ def test_no_registered_oracle_uses_upper():
     contract only lowers. Keep it that way: an oracle that uppercases
     re-opens the ß/ligature hole."""
     from pse_stocks_etl_spark import plans
-    from pse_stocks_etl_spark.plans.staging import STAGING
 
     offenders = [
         name
-        for reg in (plans.REGISTRY, STAGING)
-        for name, q in reg.items()
+        for name, q in plans.REGISTRY.items()
         if q.oracle is not None and re.search(r"\bupper\s*\(", q.oracle, re.I)
     ]
     assert not offenders, offenders
