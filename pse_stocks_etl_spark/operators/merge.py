@@ -12,21 +12,28 @@ Reference semantics (SURVEY.md §2.2 K2/K3, §2.4 J1/J2/J3, §2.3 P4/P5):
   delete+insert dance collapses into one relational expression here.
 
 Delta MERGE is not available in this image, so the engine computes the
-*post-merge relation* declaratively (anti-join the replaced keys out of
-the target, union the winning source rows in) and the storage layer
-(store/parquet_table.py) commits it atomically. On a Delta-enabled
-cluster the same plan maps 1:1 onto
+*post-merge relation* declaratively and the storage layer
+(store/parquet_table.py) commits it atomically. Like Delta, which runs
+a MERGE as one outer join of source and target, every view here is a
+projection of ONE full-outer join on the merge keys (`_merge_join`),
+which carries the K3 rule as a single `__wins` column:
+- `merge_dataframes`: per key, the source row where it wins, else the
+  target row — the post-merge relation;
+- `merge_cdf`: the insert / update_preimage / update_postimage rows;
+- `classify_merge`: the source rows tagged insert / update / skip.
+On a Delta-enabled cluster the same plan maps 1:1 onto
 `DeltaTable.merge(...).whenMatchedUpdateAll(condition).whenNotMatchedInsertAll()`.
 
-Scale notes: the anti-join and the classify join shuffle on the merge
-keys; at 100 TB the win is file pruning — the storage layer partitions
-the fact by date so a merge of a trailing window only rewrites recent
-partitions (mirrors BigQuery `PARTITION BY date`, SURVEY.md §4).
+Scale notes: the join shuffles each side once on the merge keys (a full
+outer join is never broadcast); at 100 TB the win is file pruning — the
+storage layer partitions the fact by date so a merge of a trailing
+window only joins and rewrites recent partitions (mirrors BigQuery
+`PARTITION BY date`, SURVEY.md §4).
 
-Invariant (SURVEY.md §7.5 risk 4): the source must be key-unique before
-merging — Delta MERGE throws on duplicate source keys, and the reference
-always pre-dedups (A2). `merge_dataframes` enforces it via argmax dedup
-when `dedup_order` is given.
+Invariant (SURVEY.md §7.5 risk 4): the source must be key-unique —
+Delta MERGE throws on duplicate source keys, and the reference always
+pre-dedups (A2). `ParquetTable.merge(dedup_order=)` enforces it with an
+argmax dedup before it merges; these operators assume it.
 """
 
 from __future__ import annotations
@@ -36,8 +43,6 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from .dedup import topk_per_group
 
 
 def _keys_may_be_null(df: DataFrame, keys: Sequence[str]) -> bool:
@@ -59,40 +64,52 @@ def _null_safe_key_cond(left: DataFrame, right: DataFrame, keys: Sequence[str], 
     return cond
 
 
+def _merge_join(
+    target: DataFrame,
+    source: DataFrame,
+    keys: Sequence[str],
+    freshness_col: str | None,
+) -> DataFrame:
+    """The one plan behind every merge view: source ⟗ target on `keys`
+    (null-safe). Source columns keep their names, target columns get a
+    `__t_` prefix, `__in_s` / `__in_t` are TRUE on rows carrying that
+    side, and `__wins` is the K3 rule: a source row wins iff its key is
+    new or it passes the freshness guard, where a NULL target freshness
+    (an absent target row included) always passes."""
+    t = target.select(
+        *[F.col(c).alias(f"__t_{c}") for c in target.columns],
+        F.lit(True).alias("__in_t"),
+    )
+    s = source.select("*", F.lit(True).alias("__in_s"))
+    cond = _null_safe_key_cond(s, t, keys, [f"__t_{k}" for k in keys])
+    wins = F.col("__in_s").isNotNull()
+    if freshness_col:
+        t_fresh = F.col(f"__t_{freshness_col}")
+        wins = wins & (t_fresh.isNull() | (F.col(freshness_col) >= t_fresh))
+    return s.join(t, on=cond, how="full_outer").withColumn("__wins", wins)
+
+
 def classify_merge(
     target: DataFrame,
     source: DataFrame,
     keys: Sequence[str],
     freshness_col: str | None = None,
 ) -> DataFrame:
-    """J1+P5: tag each source row 'insert' / 'update' / 'skip'.
-
-    Left-outer join source→target on the composite key (null-safe); a
-    source row is an insert when no target key matches, an update when
-    it matches and passes the freshness guard (or there is no guard),
-    else a skip. This is the relational form of the reference's staged
+    """J1+P5: tag each source row 'insert' / 'update' / 'skip': an
+    insert when no target key matches, an update when it matches and
+    wins (passes the freshness guard, or there is no guard), else a
+    skip. This is the relational form of the reference's staged
     classify (bigquery_dml__upsert_daily_stock_price.sql:10-16).
     """
-    tcols = list(keys) + ([freshness_col] if freshness_col else [])
-    tgt_cols = (
-        target.select(*tcols)
-        .withColumnsRenamed({c: f"__t_{c}" for c in tcols})
-        .withColumn("__matched", F.lit(True))
+    action = (
+        F.when(F.col("__in_t").isNull(), F.lit("insert"))
+        .when(F.col("__wins"), F.lit("update"))
+        .otherwise(F.lit("skip"))
     )
-    cond = _null_safe_key_cond(source, tgt_cols, keys, [f"__t_{k}" for k in keys])
-    joined = source.join(tgt_cols, on=cond, how="left")
-    is_new = F.col("__matched").isNull()
-    if freshness_col:
-        fresh = F.col(freshness_col) >= F.col(f"__t_{freshness_col}")
-        action = (
-            F.when(is_new, F.lit("insert"))
-            .when(fresh | F.col(f"__t_{freshness_col}").isNull(), F.lit("update"))
-            .otherwise(F.lit("skip"))
-        )
-    else:
-        action = F.when(is_new, F.lit("insert")).otherwise(F.lit("update"))
-    return joined.withColumn("merge_action", action).drop(
-        "__matched", *[f"__t_{c}" for c in tcols]
+    return (
+        _merge_join(target, source, keys, freshness_col)
+        .filter(F.col("__in_s").isNotNull())
+        .select(*source.columns, action.alias("merge_action"))
     )
 
 
@@ -101,15 +118,12 @@ def merge_dataframes(
     source: DataFrame,
     keys: Sequence[str],
     freshness_col: str | None = None,
-    dedup_order: Sequence[Column | str] | None = None,
     set_on_write: dict[str, Column] | None = None,
 ) -> DataFrame:
-    """K2/K3: the post-merge relation.
-
-    result = (target ⟕ keys-not-being-replaced)  ∪  winning source rows
-    where a source row wins per K3 iff new-key OR freshness passes.
-    Column set follows the target's schema (whenMatchedUpdateAll /
-    whenNotMatchedInsertAll semantics — all columns replaced).
+    """K2/K3: the post-merge relation — per key, the source row where it
+    wins, else the target row. Column set follows the target's schema
+    (whenMatchedUpdateAll / whenNotMatchedInsertAll semantics — all
+    columns replaced).
 
     `set_on_write` assigns columns on every written (inserted/updated)
     row — the engine's replacement for the reference's audit-column
@@ -118,25 +132,15 @@ def merge_dataframes(
     `set_on_write={"updated_at": F.current_timestamp()}`. Untouched
     target rows keep their existing values.
     """
-    cols = target.columns
-    if dedup_order is not None:
-        source = topk_per_group(source, keys, dedup_order, k=1)
-    classified = classify_merge(target, source, keys, freshness_col)
-    winners = classified.filter(F.col("merge_action") != "skip")
-    if set_on_write:
-        winners = winners.withColumns(dict(set_on_write))
-    winners = winners.select(*cols)
-    # Replaced keys leave the target; winning source rows come in.
-    # Null-safe anti-join so NULL-keyed target rows are replaced (not
-    # duplicated) when the source carries the same NULL key.
-    wkeys = winners.select(
-        *[F.col(k).alias(f"__w_{k}") for k in keys]
+    written = dict(set_on_write or {})
+    return _merge_join(target, source, keys, freshness_col).select(
+        *[
+            F.when(F.col("__wins"), written.get(c, F.col(c)))
+            .otherwise(F.col(f"__t_{c}"))
+            .alias(c)
+            for c in target.columns
+        ]
     )
-    kept = target.join(
-        wkeys, on=_null_safe_key_cond(target, wkeys, keys, [f"__w_{k}" for k in keys]),
-        how="left_anti",
-    )
-    return kept.unionByName(winners)
 
 
 def merge_cdf(
@@ -154,29 +158,13 @@ def merge_cdf(
 
     Columns = target columns + `_change_type` (Delta's reserved name).
 
-    One full-outer join on the merge keys, then a per-row branch
-    exploded into 0/1/2 CDF rows (r12 optimization): the earlier form
-    (classify join + a second target semi-join, unioned three ways)
-    re-executed the classify join in EVERY union branch — the physical
-    plan carried it three times and each branch was a full pass over
-    both inputs (plans/r12/store_mv_refresh_increment_before.txt shows
-    8 passes over the cached fact for one CDF). Here each side is
-    read and shuffled exactly once; `explode` (non-outer) drops the
-    NULL branch rows (skips and untouched target rows), so no second
-    pass filters them. Both inputs are key-unique by the MERGE
-    contract (Delta throws on duplicate source keys; the property
-    suite pins agreement with merge_dataframes on key-unique inputs),
-    under which the matched pairs here are exactly the classify
-    matches of the previous form.
+    Each joined row is exploded into 0/1/2 CDF rows, so each side is
+    read and shuffled exactly once (a union of per-change-type branches
+    would re-run the join in every branch); `explode` (non-outer) drops
+    the NULL branch rows (skips and untouched target rows), so no
+    second pass filters them.
     """
     cols = list(target.columns)
-    t = target.select(
-        *[F.col(c).alias(f"__t_{c}") for c in cols],
-        F.lit(True).alias("__t_matched"),
-    )
-    s = source.select(*cols, F.lit(True).alias("__s_matched"))
-    cond = _null_safe_key_cond(s, t, keys, [f"__t_{k}" for k in keys])
-    joined = s.join(t, on=cond, how="full_outer")
 
     def _row(prefix: str, change: str):
         return F.struct(
@@ -184,24 +172,18 @@ def merge_cdf(
             F.lit(change).alias("_change_type"),
         )
 
-    if freshness_col:
-        fresh_ok = (
-            F.col(freshness_col) >= F.col(f"__t_{freshness_col}")
-        ) | F.col(f"__t_{freshness_col}").isNull()
-    else:
-        fresh_ok = F.lit(True)
     branch = (
         F.when(
-            F.col("__t_matched").isNull(), F.array(_row("", "insert"))
+            F.col("__wins") & F.col("__in_t").isNull(),
+            F.array(_row("", "insert")),
         )
         .when(
-            F.col("__s_matched").isNotNull() & fresh_ok,
-            F.array(
-                _row("__t_", "update_preimage"), _row("", "update_postimage")
-            ),
+            F.col("__wins"),
+            F.array(_row("__t_", "update_preimage"), _row("", "update_postimage")),
         )
         # else NULL: freshness skip, or target-only row — explode drops it
     )
+    joined = _merge_join(target, source, keys, freshness_col)
     return joined.select(F.explode(branch).alias("__r")).select("__r.*")
 
 

@@ -22,9 +22,13 @@ from pyspark.sql import functions as F
 from ..functions.datetime import epoch_default
 
 
-def watermarks(df: DataFrame, key: str, ts_col: str, alias: str = "latest_date") -> DataFrame:
+# The watermark column `watermarks` writes and `incremental_windows` reads.
+WATERMARK_COL = "latest_date"
+
+
+def watermarks(df: DataFrame, key: str, ts_col: str) -> DataFrame:
     """A1: per-key max(ts) — partial-aggregating groupBy, one shuffle."""
-    return df.groupBy(key).agg(F.max(ts_col).alias(alias))
+    return df.groupBy(key).agg(F.max(ts_col).alias(WATERMARK_COL))
 
 
 def manila_today(now: Column | None = None) -> Column:
@@ -42,7 +46,6 @@ def incremental_windows(
     lookback_days: int = 0,
     freshness_days: int = 1,
     today: Column | str | None = None,
-    wm_col: str = "latest_date",
 ) -> DataFrame:
     """F2+F3+J4+T2+T3+P7 composed: the per-key fetch plan.
 
@@ -56,7 +59,7 @@ def incremental_windows(
         if today is None
         else (F.to_date(F.lit(today)) if isinstance(today, str) else today)
     )
-    wm = epoch_default(F.col(wm_col))
+    wm = epoch_default(F.col(WATERMARK_COL))
     joined = keys_df.join(F.broadcast(wm_df), on=key, how="left")
     return joined.select(
         key,

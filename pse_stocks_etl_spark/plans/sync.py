@@ -105,7 +105,7 @@ class PseDatasets:
 
         # Persist the fetch result: count + the merge plan reference the
         # batch several times (affected-partition collect, the write, and
-        # on re-merged partitions the anti-join and union), and without
+        # on re-merged partitions the merge join), and without
         # pinning it each reference would re-run the connector fetch —
         # several times the API cost, and a live connector could
         # return *different* rows per execution, making the merge's

@@ -33,6 +33,12 @@ PRICE_DDL = (
 DEFAULT_SYMBOLS = "JFC,SM,ALI,BDO,TEL,URC,MER,AC"
 
 
+def _scan_options(options: dict) -> tuple[list[str], str, str]:
+    """The `symbols` / `start` / `end` options both readers take."""
+    symbols = [s for s in options.get("symbols", DEFAULT_SYMBOLS).split(",") if s]
+    return symbols, options.get("start", "2024-01-01"), options.get("end", "2024-01-31")
+
+
 class _SymbolPartition(InputPartition):
     def __init__(self, symbol: str, start: str, end: str):
         self.symbol = symbol
@@ -91,11 +97,7 @@ class PseEdgeDataSource(DataSource):
 
 class PseEdgeReader(DataSourceReader):
     def __init__(self, options: dict):
-        self.symbols = [
-            s for s in options.get("symbols", DEFAULT_SYMBOLS).split(",") if s
-        ]
-        self.start = options.get("start", "2024-01-01")
-        self.end = options.get("end", "2024-01-31")
+        self.symbols, self.start, self.end = _scan_options(options)
 
     def partitions(self) -> list[_SymbolPartition]:
         # One partition per symbol: the scan parallelizes across
@@ -125,11 +127,7 @@ class PseEdgeStreamReader(DataSourceStreamReader):
     parallel scan, same as the batch reader."""
 
     def __init__(self, options: dict):
-        self.symbols = [
-            s for s in options.get("symbols", DEFAULT_SYMBOLS).split(",") if s
-        ]
-        self.start = options.get("start", "2024-01-01")
-        self.end = options.get("end", "2024-01-31")
+        self.symbols, self.start, self.end = _scan_options(options)
         self.days_per_batch = int(options.get("days_per_batch", "7"))
 
     def initialOffset(self) -> dict:

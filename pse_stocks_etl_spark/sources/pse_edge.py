@@ -272,15 +272,13 @@ class FakePseEdge:
 def distributed_fetch(
     windows_df: DataFrame,
     fetch_fn: Callable[[str, date, date], pd.DataFrame],
-    key_col: str = "symbol",
-    start_col: str = "target_start",
-    end_col: str = "target_end",
 ) -> DataFrame:
     """T5 re-architected: executor-side fetch over the pending-window plan.
 
     `windows_df` is the output of operators.watermark.incremental_windows
-    (one row per key needing data). Repartition by key → each task fetches
-    its keys' windows via `fetch_fn` and yields Arrow batches in the fact
+    (one row per `symbol` needing data, with its `target_start` and
+    `target_end`). Repartition by symbol → each task fetches its
+    symbols' windows via `fetch_fn` and yields Arrow batches in the fact
     schema. Replaces the reference's driver thread pool
     (multithreading.py:62-66) with Spark's own task scheduling.
     """
@@ -289,11 +287,7 @@ def distributed_fetch(
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
-                got = fetch_fn(
-                    getattr(row, key_col),
-                    getattr(row, start_col),
-                    getattr(row, end_col),
-                )
+                got = fetch_fn(row.symbol, row.target_start, row.target_end)
                 if got is not None and len(got):
                     out.append(got)
             yield (
@@ -304,6 +298,6 @@ def distributed_fetch(
 
     n = max(windows_df.sparkSession.sparkContext.defaultParallelism, 1)
     return (
-        windows_df.repartition(n, key_col)
+        windows_df.repartition(n, "symbol")
         .mapInPandas(fetch_partition, schema=DAILY_STOCK_PRICE_SCHEMA)
     )

@@ -38,10 +38,10 @@ plan.
 
 Scale posture: `partition_by` lays the fact table out by date (mirrors
 BigQuery `PARTITION BY date`, SURVEY.md §4) so incremental merges and
-date-range scans prune files; merge itself is the relational anti-join ∪
-winners plan from operators/merge.py, which shuffles only on the key —
-or, when the batch touches no existing row (the daily sync), a plain
-append of the deduped batch with no join at all.
+date-range scans prune files; merge itself is the one full-outer-join
+plan from operators/merge.py, which shuffles only on the key — or, when
+the batch touches no existing row (the daily sync), a plain append of
+the deduped batch with no join at all.
 """
 
 from __future__ import annotations
@@ -161,8 +161,8 @@ class ParquetTable:
         col END`, so the write job itself fails on the first violating
         row — no separate validation pass over the commit plan. A
         projected column (not a Filter) so Catalyst can neither prune
-        the guard nor push it below the merge's anti-join onto rows that
-        are never written."""
+        the guard nor push it below the merge's join onto rows that are
+        never written."""
         if not self.constraints:
             return df
         names = df.columns
@@ -354,10 +354,12 @@ class ParquetTable:
         an incremental sync costs O(window), not O(table) (SCALE.md
         "Merge / upsert").
 
-        Append-only: when the (pruned) target slice is empty — as a
-        daily sync's new date partition is — every source key is an
-        insert, so the commit is the deduped batch with `set_on_write`
-        applied: no classify join, no anti-join. The rows equal
+        The batch is deduped once, by `dedup_order`, before the merge:
+        the operators in operators/merge.py take a key-unique source, as
+        Delta's MERGE does. Append-only: when the (pruned) target slice
+        is empty — as a daily sync's new date partition is — every
+        source key is an insert, so the commit is the deduped batch with
+        `set_on_write` applied and no join. The rows equal
         merge_dataframes'.
 
         An empty batch commits nothing and evolves no schema; on a
@@ -422,20 +424,16 @@ class ParquetTable:
             if any(v is None for v in affected):
                 prune = prune | F.col(pcol).isNull()
             target = target.filter(prune)
+        if dedup_order is not None:
+            source = topk_per_group(source, keys, dedup_order, k=1)
         if target.isEmpty():
             # Append-only: every source key is an insert, so this is
-            # exactly what merge_dataframes computes, minus its classify
-            # join and anti-join against an empty slice. Partition
-            # pruning leaves the isEmpty() above no files to scan.
-            merged = source
-            if dedup_order is not None:
-                merged = topk_per_group(merged, keys, dedup_order, k=1)
-            if set_on_write:
-                merged = merged.withColumns(dict(set_on_write))
+            # exactly what merge_dataframes computes, minus its join
+            # against an empty slice. Partition pruning leaves the
+            # isEmpty() above no files to scan.
+            merged = source.withColumns(dict(set_on_write or {}))
         else:
-            merged = merge_dataframes(
-                target, source, keys, freshness_col, dedup_order, set_on_write
-            )
+            merged = merge_dataframes(target, source, keys, freshness_col, set_on_write)
         self._commit(merged, expected_version=base, carry_untouched=pcol, schema=schema)
 
     def optimize(
@@ -538,16 +536,19 @@ class ParquetTable:
 
     def vacuum(self, retain_versions: int = 2) -> list[str]:
         """K9: drop version dirs older than the newest `retain_versions`
-        (never the current one), staging dirs whose base is no longer
-        current (that writer can never publish) and leftover trash. A
-        dir is renamed away before it is deleted, so a killed vacuum
-        never leaves a half-deleted version. Returns removed versions."""
+        (never the current one, so 0 keeps only it), staging dirs whose
+        base is no longer current (that writer can never publish) and
+        leftover trash. A dir is renamed away before it is deleted, so a
+        killed vacuum never leaves a half-deleted version. Returns
+        removed versions."""
+        if retain_versions < 0:
+            raise ValueError(f"retain_versions must be >= 0, got {retain_versions}")
         vdir = os.path.join(self.path, _VERSIONS)
         entries = sorted(os.listdir(vdir))
         versions = sorted(
             (e for e in entries if _VERSION_RE.match(e)), key=lambda e: int(e[1:])
         )
-        removed = [v for v in versions[:-1] if v not in versions[-retain_versions:]]
+        removed = versions[: -max(retain_versions, 1)]
         current = self.current_version()
         for e in entries:
             stage = _STAGE_RE.match(e)
@@ -556,7 +557,3 @@ class ParquetTable:
             elif e.startswith(_TRASH):
                 shutil.rmtree(os.path.join(vdir, e))
         return removed
-
-    def drop(self) -> None:
-        """K8: remove the table entirely."""
-        shutil.rmtree(self.path, ignore_errors=True)

@@ -114,6 +114,19 @@ def test_vacuum_keeps_current(spark, table):
     assert table.read().collect()[0].v == 3.0  # current still readable
 
 
+def test_vacuum_retain_zero_keeps_only_current(spark, table):
+    for i in range(3):
+        table.overwrite(
+            spark.createDataFrame(_rows(("A", "2024-01-01", float(i), "2024-01-01T00:00:00")), SCHEMA)
+        )
+    with pytest.raises(ValueError):
+        table.vacuum(retain_versions=-1)
+    assert table.history() == [1, 2, 3, 4]  # init_empty + 3 overwrites
+    assert table.vacuum(retain_versions=0) == ["v00001", "v00002", "v00003"]
+    assert table.history() == [4]
+    assert table.read().collect()[0].v == 2.0
+
+
 def test_empty_source_merge_noop(spark, table):
     t0 = spark.createDataFrame(_rows(("A", "2024-01-01", 1.0, "2024-01-01T00:00:00")), SCHEMA)
     table.overwrite(t0)
@@ -878,13 +891,13 @@ def test_check_violation_leaves_no_version_behind(spark, tmp_path, how):
 
 def test_append_only_merge_equals_full_merge(spark, tmp_path, monkeypatch):
     """A batch that lands only in new partitions, or in an empty
-    unpartitioned table, skips the classify and anti-join plan
-    (merge_dataframes is never called) yet commits the same rows
-    merge_dataframes computes over the full table: in-batch duplicates
-    deduped by dedup_order, set_on_write applied, untouched partitions
-    carried as hardlinks."""
+    unpartitioned table, skips the merge join (merge_dataframes is
+    never called) yet commits the same rows merge_dataframes computes
+    over the full table from the source deduped by dedup_order:
+    set_on_write applied, untouched partitions carried as hardlinks."""
     import os
 
+    from pse_stocks_etl_spark.operators.dedup import topk_per_group
     from pse_stocks_etl_spark.operators.merge import merge_dataframes
     from pse_stocks_etl_spark.store import parquet_table as ptmod
 
@@ -900,18 +913,16 @@ def test_append_only_merge_equals_full_merge(spark, tmp_path, monkeypatch):
               ("B", "2024-01-04", 3.0, "2024-01-03T00:00:00"),
               ("B", "2024-01-04", 3.0, "2024-01-04T00:00:00"),   # wins on ts
               ("C", "2024-01-04", 4.0, "2024-01-04T00:00:00")), PART_SCHEMA)
-    kw = dict(
-        freshness_col="extracted_at",
-        dedup_order=[F.col("v").desc(), F.col("extracted_at").desc()],
-        set_on_write={"v": F.col("v") * 10},
-    )
+    dedup_order = [F.col("v").desc(), F.col("extracted_at").desc()]
+    deduped = topk_per_group(src, ("k", "d"), dedup_order, k=1)
+    kw = dict(freshness_col="extracted_at", set_on_write={"v": F.col("v") * 10})
     expected = sorted(
-        map(tuple, merge_dataframes(t.read(), src, ("k", "d"), **kw).collect())
+        map(tuple, merge_dataframes(t.read(), deduped, ("k", "d"), **kw).collect())
     )
     empty = ParquetTable(spark, str(tmp_path / "ao_empty"), PART_SCHEMA)
     empty.init_empty()
     expected_empty = sorted(
-        map(tuple, merge_dataframes(empty.read(), src, ("k", "d"), **kw).collect())
+        map(tuple, merge_dataframes(empty.read(), deduped, ("k", "d"), **kw).collect())
     )
 
     def no_join_merge(*args, **kwargs):
@@ -919,7 +930,7 @@ def test_append_only_merge_equals_full_merge(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(ptmod, "merge_dataframes", no_join_merge)
     v1 = os.path.join(t.path, "_versions", t._pointer(), "d=2024-01-01")
-    t.merge(src, keys=("k", "d"), **kw)
+    t.merge(src, keys=("k", "d"), dedup_order=dedup_order, **kw)
     assert sorted(map(tuple, t.read().collect())) == expected
     assert len(expected) == 5
     v2 = os.path.join(t.path, "_versions", t._pointer(), "d=2024-01-01")
@@ -927,29 +938,40 @@ def test_append_only_merge_equals_full_merge(spark, tmp_path, monkeypatch):
         os.stat(os.path.join(v2, f)).st_ino for f in os.listdir(v2)
     }
     # An unpartitioned empty table takes the same append-only path.
-    empty.merge(src, keys=("k", "d"), **kw)
+    empty.merge(src, keys=("k", "d"), dedup_order=dedup_order, **kw)
     assert sorted(map(tuple, empty.read().collect())) == expected_empty
     assert len(expected_empty) == 3
 
 
-# Spark jobs of one daily PseDatasets.sync (8 symbols, one new trading
-# day) before the CHECK constraint was fused into the write and the
-# append-only merge path existed.
-_DAILY_SYNC_JOBS_BEFORE = 20
-
-
-def test_daily_sync_job_count(spark, tmp_path):
+def _sync_jobs(spark, tmp_path, lookback_days):
+    """Spark job ids of one PseDatasets.sync on 2024-01-23 (8 symbols)
+    after a backfill to 2024-01-20, and its result."""
     from pse_stocks_etl_spark.plans.sync import PseDatasets
 
     ds = PseDatasets(spark, str(tmp_path / "pse"))
     ds.initdb()
     ds.backfill(today="2024-01-20")
     sc = spark.sparkContext
-    sc.setJobGroup("test_daily_sync_job_count", "one daily sync")
+    group = f"sync_jobs_lookback_{lookback_days}"
+    sc.setJobGroup(group, "one sync")
     try:
-        r = ds.sync(today="2024-01-23")
+        r = ds.sync(today="2024-01-23", lookback_days=lookback_days)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert r["price_rows"] == len(ds.connector.symbols)
-    jobs = sc.statusTracker().getJobIdsForGroup("test_daily_sync_job_count")
-    assert len(jobs) <= _DAILY_SYNC_JOBS_BEFORE - 5, len(jobs)
+    return sc.statusTracker().getJobIdsForGroup(group), r, len(ds.connector.symbols)
+
+
+def test_daily_sync_job_count(spark, tmp_path):
+    """One new trading day lands in a new partition: the append-only
+    merge, with no join."""
+    jobs, r, n_symbols = _sync_jobs(spark, tmp_path, lookback_days=0)
+    assert r["price_rows"] == n_symbols
+    assert len(jobs) <= 12, len(jobs)
+
+
+def test_lookback_sync_job_count(spark, tmp_path):
+    """A 5-day lookback replays 2024-01-15..22 over existing partitions:
+    the keyed merge, one outer join of batch and target slice."""
+    jobs, r, n_symbols = _sync_jobs(spark, tmp_path, lookback_days=5)
+    assert r["price_rows"] == 6 * n_symbols  # six trading days
+    assert len(jobs) <= 14, len(jobs)

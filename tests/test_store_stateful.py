@@ -4,7 +4,10 @@ restore, each through one of two handles opened on the same table, are
 mirrored into a pure-python model (current columns and rows + full
 version history), and after EVERY step the table must agree with the
 model — the current read through both handles, and time-travel to every
-retained version. Single-op
+retained version. Every example begins with a freshness-guarded stale
+replay of one row, and every merge rule rewrites one existing key, so a
+merge that appends instead of upserting, or a guard that ignores
+freshness, fails every run. Single-op
 properties live in test_properties.py; this machine checks that the
 OPERATIONS COMPOSE (restore-after-merge, merge-after-delete, ...),
 which is where versioned stores actually break."""
@@ -12,12 +15,14 @@ which is where versioned stores actually break."""
 from __future__ import annotations
 
 import os
+from functools import reduce
 
 import pytest
 from hypothesis import HealthCheck, Phase, settings
 from hypothesis import strategies as st
 from hypothesis.stateful import RuleBasedStateMachine, initialize, invariant, rule
 
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pse_stocks_etl_spark.store.parquet_table import ParquetTable
@@ -56,6 +61,22 @@ noted_rows_strategy = st.lists(
     unique_by=lambda r: r[0],
 )
 handle_strategy = st.integers(min_value=0, max_value=1)
+# Picks the existing key a merge rewrites (modulo the model's size).
+pick_strategy = st.integers(min_value=0, max_value=10_000)
+
+
+def _sorted_rows(frames):
+    """{tag: sorted rows} of each {tag: frame}, read in ONE Spark job (a
+    tagged union by name); each frame's rows keep its own columns."""
+    union = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [df.withColumn("__tag", F.lit(tag)) for tag, df in frames.items()],
+    )
+    columns = {tag: df.columns for tag, df in frames.items()}
+    out = {tag: [] for tag in columns}
+    for r in union.collect():
+        out[r["__tag"]].append(tuple(r[c] for c in columns[r["__tag"]]))
+    return {tag: sorted(rows) for tag, rows in out.items()}
 
 
 class _Crash(BaseException):
@@ -65,8 +86,8 @@ class _Crash(BaseException):
 class StoreMachine(RuleBasedStateMachine):
     spark = None  # class attr, set by the test wrapper
 
-    @initialize(rows=rows_strategy)
-    def init_table(self, rows, tmp_path=None):
+    @initialize(rows=rows_strategy.filter(bool), pick=pick_strategy)
+    def init_table(self, rows, pick):
         import tempfile
 
         self.root = tempfile.mkdtemp(prefix="store_sm_") + "/t"
@@ -80,6 +101,11 @@ class StoreMachine(RuleBasedStateMachine):
         self.model = {r[0]: r for r in rows}
         # versions[i] == (columns, rows) of table version i+1
         self.versions = [(self.columns, dict(self.model))]
+        # Every example starts with a stale replay of one row: a merge
+        # that appends instead of upserting, or a guard that ignores
+        # freshness, fails this step whatever rules follow (the rules
+        # themselves are enabled at random per example).
+        self.merge_fresh(0, [], pick)
 
     def _commit_model(self):
         self.versions.append((self.columns, dict(self.model)))
@@ -94,22 +120,34 @@ class StoreMachine(RuleBasedStateMachine):
     def _row(self, r):
         return r + (None,) if "note" in self.columns else r
 
+    def _hit(self, rows, pick, fresh_shift=0, tail=()):
+        """`rows` plus a rewrite of the existing key `pick` chooses: a
+        batch of new keys alone cannot tell an upsert from an append.
+        `fresh_shift=-1` makes the rewrite a stale replay."""
+        if not self.model:
+            return rows
+        k = sorted(self.model)[pick % len(self.model)]
+        _, val, fresh = self.model[k][:3]
+        return [r for r in rows if r[0] != k] + [(k, val + 1, fresh + fresh_shift) + tail]
+
     @rule(h=handle_strategy, rows=rows_strategy)
     def overwrite(self, h, rows):
         self.handles[h].overwrite(self._df(rows))
         self.model = {r[0]: self._row(r) for r in rows}
         self._commit_model()
 
-    @rule(h=handle_strategy, rows=rows_strategy)
-    def merge(self, h, rows):
+    @rule(h=handle_strategy, rows=rows_strategy, pick=pick_strategy)
+    def merge(self, h, rows, pick):
+        rows = self._hit(rows, pick)
         self.handles[h].merge(self._df(rows), keys=["k"])
         if rows:  # empty-source merge is a no-op commit-wise
             for r in rows:
                 self.model[r[0]] = self._row(r)
             self._commit_model()
 
-    @rule(h=handle_strategy, rows=rows_strategy)
-    def merge_fresh(self, h, rows):
+    @rule(h=handle_strategy, rows=rows_strategy, pick=pick_strategy)
+    def merge_fresh(self, h, rows, pick):
+        rows = self._hit(rows, pick, fresh_shift=-1)
         self.handles[h].merge(self._df(rows), keys=["k"], freshness_col="fresh")
         if rows:
             for r in rows:
@@ -117,8 +155,9 @@ class StoreMachine(RuleBasedStateMachine):
                     self.model[r[0]] = self._row(r)
             self._commit_model()
 
-    @rule(h=handle_strategy, rows=noted_rows_strategy)
-    def evolve_merge(self, h, rows):
+    @rule(h=handle_strategy, rows=noted_rows_strategy, pick=pick_strategy)
+    def evolve_merge(self, h, rows, pick):
+        rows = self._hit(rows, pick, tail=(0,))
         df = self.spark.createDataFrame(rows, T.StructType(SCHEMA.fields + [NOTE]))
         self.handles[h].merge(df, keys=["k"], evolve_schema=True)
         if rows:  # an empty batch evolves nothing
@@ -178,7 +217,7 @@ class StoreMachine(RuleBasedStateMachine):
         left = [e for e in os.listdir(os.path.join(self.root, "_versions")) if e.startswith(".")]
         assert all(e.startswith(f".stage-{cur:05d}-") for e in left), left
 
-    @rule(h=handle_strategy, pick=st.integers(min_value=0, max_value=10_000))
+    @rule(h=handle_strategy, pick=pick_strategy)
     def restore(self, h, pick):
         hist = self.table.history()
         version = hist[pick % len(hist)]
@@ -189,26 +228,22 @@ class StoreMachine(RuleBasedStateMachine):
 
     @invariant()
     def table_matches_model(self):
+        """The current read through both handles, and time travel to
+        every retained version, equal the model."""
         if not hasattr(self, "table"):
             return
-        want = sorted(self.model.values())
+        frames, want = {}, {}
         for h, table in enumerate(self.handles):
-            df = table.read()
-            assert df.columns == self.columns, f"handle {h}: {df.columns} != {self.columns}"
-            got = sorted(tuple(r) for r in df.collect())
-            assert got == want, f"handle {h} current: {got} != {want}"
-
-    @invariant()
-    def every_retained_version_matches_history(self):
-        if not hasattr(self, "table"):
-            return
+            frames[f"handle {h}"] = table.read()
+            want[f"handle {h}"] = (self.columns, self.model)
         for v in self.table.history():
-            columns, rows = self.versions[v - 1]
-            df = self.table.read(version=v)
-            assert df.columns == columns, f"v{v}: {df.columns} != {columns}"
-            got = sorted(tuple(r) for r in df.collect())
-            want = sorted(rows.values())
-            assert got == want, f"v{v}: {got} != {want}"
+            frames[f"v{v}"] = self.table.read(version=v)
+            want[f"v{v}"] = self.versions[v - 1]
+        for tag, df in frames.items():
+            assert df.columns == want[tag][0], f"{tag}: {df.columns} != {want[tag][0]}"
+        for tag, got in _sorted_rows(frames).items():
+            rows = sorted(want[tag][1].values())
+            assert got == rows, f"{tag}: {got} != {rows}"
 
 
 @pytest.mark.usefixtures("spark")
