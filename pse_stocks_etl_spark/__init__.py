@@ -6,8 +6,8 @@ re-expressed Spark-first:
 
 - DataFrame / Spark SQL logical plans, Catalyst does the optimizing.
 - Columnar parquet storage with an ACID-ish merge layer (Delta MERGE
-  semantics emulated with anti-join + union; delta-spark jars are not in
-  this image).
+  semantics emulated as one full outer join of a key-unique batch and
+  the table; delta-spark jars are not in this image).
 - Incremental sync (per-key watermark -> date window -> fetch -> dedup ->
   freshness-guarded upsert) as pure DataFrame logic.
 - LLM-data-pipeline extensions: dedup (exact / MinHash-LSH / SimHash /

@@ -32,16 +32,17 @@ window only joins and rewrites recent partitions (mirrors BigQuery
 
 Invariant (SURVEY.md §7.5 risk 4): the source must be key-unique —
 Delta MERGE throws on duplicate source keys, and the reference always
-pre-dedups (A2). `ParquetTable.merge(dedup_order=)` enforces it with an
-argmax dedup before it merges; these operators assume it.
+pre-dedups (A2). These operators assume it and do not check it; the
+store's `ParquetTable.merge` is the one place that enforces it, by
+deduping with the caller's `dedup_order` or else refusing a batch that
+repeats a key.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
-from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -118,26 +119,15 @@ def merge_dataframes(
     source: DataFrame,
     keys: Sequence[str],
     freshness_col: str | None = None,
-    set_on_write: dict[str, Column] | None = None,
 ) -> DataFrame:
     """K2/K3: the post-merge relation — per key, the source row where it
     wins, else the target row. Column set follows the target's schema
     (whenMatchedUpdateAll / whenNotMatchedInsertAll semantics — all
     columns replaced).
-
-    `set_on_write` assigns columns on every written (inserted/updated)
-    row — the engine's replacement for the reference's audit-column
-    triggers (`updated_at` DEFAULT NOW(), company.sql:14-15,
-    trigger_set_timestamp.sql:3-9): e.g.
-    `set_on_write={"updated_at": F.current_timestamp()}`. Untouched
-    target rows keep their existing values.
     """
-    written = dict(set_on_write or {})
     return _merge_join(target, source, keys, freshness_col).select(
         *[
-            F.when(F.col("__wins"), written.get(c, F.col(c)))
-            .otherwise(F.col(f"__t_{c}"))
-            .alias(c)
+            F.when(F.col("__wins"), F.col(c)).otherwise(F.col(f"__t_{c}")).alias(c)
             for c in target.columns
         ]
     )
@@ -185,9 +175,3 @@ def merge_cdf(
     )
     joined = _merge_join(target, source, keys, freshness_col)
     return joined.select(F.explode(branch).alias("__r")).select("__r.*")
-
-
-def union_all(dfs: Sequence[DataFrame]) -> DataFrame:
-    """U1: union-all of homogeneous batches by column name (reference
-    pd.concat at pse_edge.py:104; glob CSV read at deltalake_sync.py:229)."""
-    return reduce(lambda a, b: a.unionByName(b), dfs)

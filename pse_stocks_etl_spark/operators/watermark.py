@@ -9,7 +9,7 @@ Reference semantics (SURVEY.md §2.5 A1, §2.9 T1-T3, §2.4 J4, §2.8 F2/F3):
 - J4 dict-lookup join == broadcast hash join of keys against watermarks,
   epoch default on miss (F3: postgres_sync.py:200 datetime(1970,1,1)).
 - F2 date windows: start = watermark + (1 - lookback_days);
-  end = Manila "today" - freshness_days (postgres_sync.py:200-202).
+  end = Manila "today" - FRESHNESS_DAYS (postgres_sync.py:200-202).
 - P7 up-to-date short-circuit: skip keys whose window is empty
   (postgres_sync.py:205-206) — an anti-join/filter, not a python `if`.
 """
@@ -24,6 +24,9 @@ from ..functions.datetime import epoch_default
 
 # The watermark column `watermarks` writes and `incremental_windows` reads.
 WATERMARK_COL = "latest_date"
+# T3: a window ends this many days before Manila "today", so a sync never
+# fetches today's possibly partial day (postgres_sync.py:183-186).
+FRESHNESS_DAYS = 1
 
 
 def watermarks(df: DataFrame, key: str, ts_col: str) -> DataFrame:
@@ -31,12 +34,10 @@ def watermarks(df: DataFrame, key: str, ts_col: str) -> DataFrame:
     return df.groupBy(key).agg(F.max(ts_col).alias(WATERMARK_COL))
 
 
-def manila_today(now: Column | None = None) -> Column:
+def manila_today() -> Column:
     """Business 'today' in UTC+8 Manila, computed as utcnow()+8h exactly
-    like the reference (postgres_sync.py:202 `utcnow()+timedelta(hours=8)`).
-    Pass a pinned `now` timestamp column for deterministic tests."""
-    now = F.current_timestamp() if now is None else now
-    return F.to_date(now + F.expr("INTERVAL 8 HOURS"))
+    like the reference (postgres_sync.py:202 `utcnow()+timedelta(hours=8)`)."""
+    return F.to_date(F.current_timestamp() + F.expr("INTERVAL 8 HOURS"))
 
 
 def incremental_windows(
@@ -44,8 +45,7 @@ def incremental_windows(
     wm_df: DataFrame,
     key: str,
     lookback_days: int = 0,
-    freshness_days: int = 1,
-    today: Column | str | None = None,
+    today: str | None = None,
 ) -> DataFrame:
     """F2+F3+J4+T2+T3+P7 composed: the per-key fetch plan.
 
@@ -53,19 +53,16 @@ def incremental_windows(
     `up_to_date` (window empty → nothing to fetch). `keys_df` is the key
     universe (dimension); `wm_df` the A1 output. The watermark side is
     broadcast — it is one row per key, tiny relative to the fact table.
+    `today` pins Manila "today" as an ISO date (default: the clock).
     """
-    today_col = (
-        manila_today()
-        if today is None
-        else (F.to_date(F.lit(today)) if isinstance(today, str) else today)
-    )
+    today_col = manila_today() if today is None else F.to_date(F.lit(today))
     wm = epoch_default(F.col(WATERMARK_COL))
     joined = keys_df.join(F.broadcast(wm_df), on=key, how="left")
     return joined.select(
         key,
         wm.alias("watermark"),
         F.date_add(wm, 1 - lookback_days).alias("target_start"),
-        F.date_sub(today_col, freshness_days).alias("target_end"),
+        F.date_sub(today_col, FRESHNESS_DAYS).alias("target_end"),
     ).withColumn(
         "up_to_date",
         # lookback_days is a plan-time constant: branch in Python rather

@@ -13,13 +13,15 @@ parity; every per-group argmax carries an explicit total-order tiebreak;
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.datetime import format_api_date, format_ts
 from ..functions.money import avg_money, sql_avg_money, sql_cents, sql_sum_money, sum_money
 from ..operators.dedup import argmax_dedup, topk_per_group
-from ..operators.merge import classify_merge, merge_dataframes, union_all
+from ..operators.merge import classify_merge, merge_dataframes
 from ..operators.watermark import incremental_windows, watermarks
 from ..sources.catalog import load_table
 from .registry import register
@@ -272,7 +274,7 @@ def union_all_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     parts = [li.filter(F.col("l_linenumber") % 3 == i) for i in range(3)]
     return (
-        union_all(parts)
+        reduce(DataFrame.unionByName, parts)
         .groupBy(F.col("l_returnflag").alias("returnflag"))
         .agg(F.count("*").alias("n_rows"), sum_money(F.col("l_quantity")).alias("sum_qty"))
     )
@@ -486,9 +488,7 @@ def incremental_windows_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_suppkey").alias("suppkey"), F.to_date("l_shipdate").alias("d")
     )
     wm = watermarks(li, "suppkey", "d")
-    return incremental_windows(
-        sup, wm, "suppkey", lookback_days=0, freshness_days=1, today=TODAY
-    )
+    return incremental_windows(sup, wm, "suppkey", lookback_days=0, today=TODAY)
 
 
 @register(

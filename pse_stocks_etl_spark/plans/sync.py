@@ -24,7 +24,7 @@ from __future__ import annotations
 import os
 from datetime import date
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.watermark import incremental_windows, pending_keys, watermarks
@@ -74,7 +74,7 @@ class PseDatasets:
     def price_fetch_plan(
         self,
         lookback_days: int = 0,
-        today: str | Column | None = None,
+        today: str | None = None,
     ) -> DataFrame:
         """A1 → J4 → F2/T2/T3 → P7: one row per symbol still needing data.
         Stays a DataFrame end-to-end (the reference collapses this to a
@@ -86,7 +86,6 @@ class PseDatasets:
             wm,
             "symbol",
             lookback_days=lookback_days,
-            freshness_days=1,  # T3: never fetch today's possibly partial day
             today=today,
         )
         return pending_keys(windows)
@@ -94,7 +93,7 @@ class PseDatasets:
     def sync_prices(
         self,
         lookback_days: int = 0,
-        today: str | Column | None = None,
+        today: str | None = None,
     ) -> int:
         """Fact sync: fetch pending windows executor-side, dedup, merge."""
         plan = self.price_fetch_plan(lookback_days, today)

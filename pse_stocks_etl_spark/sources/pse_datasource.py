@@ -24,18 +24,16 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
+from pyspark.sql.types import StructType
 
-PRICE_DDL = (
-    "symbol string, date date, open double, high double, low double, "
-    "close double, extracted_at timestamp_ntz"
-)
-
-DEFAULT_SYMBOLS = "JFC,SM,ALI,BDO,TEL,URC,MER,AC"
+from ..schemas import DAILY_STOCK_PRICE_SCHEMA
+from .pse_edge import FakePseEdge
 
 
 def _scan_options(options: dict) -> tuple[list[str], str, str]:
     """The `symbols` / `start` / `end` options both readers take."""
-    symbols = [s for s in options.get("symbols", DEFAULT_SYMBOLS).split(",") if s]
+    listed = ",".join(FakePseEdge.SYMBOLS)
+    symbols = [s for s in options.get("symbols", listed).split(",") if s]
     return symbols, options.get("start", "2024-01-01"), options.get("end", "2024-01-31")
 
 
@@ -48,10 +46,7 @@ class _SymbolPartition(InputPartition):
 
 def _read_partition(partition: _SymbolPartition):
     """Rows of one symbol's [start, end] window, shared by the batch and
-    the stream reader. Runs on executors, so the connector is imported
-    here: the pickled reader stays free of Spark/driver state."""
-    from .pse_edge import FakePseEdge
-
+    the stream reader. Runs on executors."""
     fake = FakePseEdge([partition.symbol])
     pdf = fake.get_stock_data(
         partition.symbol,
@@ -85,8 +80,8 @@ class PseEdgeDataSource(DataSource):
     def name(cls) -> str:
         return "pse_edge_fake"
 
-    def schema(self) -> str:
-        return PRICE_DDL
+    def schema(self) -> StructType:
+        return DAILY_STOCK_PRICE_SCHEMA
 
     def reader(self, schema) -> "PseEdgeReader":
         return PseEdgeReader(self.options)

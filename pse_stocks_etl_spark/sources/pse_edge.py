@@ -206,6 +206,8 @@ class FakePseEdge:
     """
 
     SECTORS = ["Industrial", "Financials", "Property", "Holding Firms", "Services"]
+    # The listed symbols when none are given.
+    SYMBOLS = ("JFC", "SM", "ALI", "BDO", "TEL", "URC", "MER", "AC")
 
     def __init__(
         self,
@@ -213,7 +215,7 @@ class FakePseEdge:
         extracted_at: str = "2024-01-02 00:00:00",
         history_start: str = "2024-01-01",
     ):
-        self.symbols = symbols or ["JFC", "SM", "ALI", "BDO", "TEL", "URC", "MER", "AC"]
+        self.symbols = symbols or list(self.SYMBOLS)
         self.extracted_at = pd.Timestamp(extracted_at)
         # Earliest date the fake exchange has data for — like the real
         # API, requests further back return nothing (keeps epoch-default

@@ -41,7 +41,7 @@ BigQuery `PARTITION BY date`, SURVEY.md §4) so incremental merges and
 date-range scans prune files; merge itself is the one full-outer-join
 plan from operators/merge.py, which shuffles only on the key — or, when
 the batch touches no existing row (the daily sync), a plain append of
-the deduped batch with no join at all.
+the key-unique batch with no join at all.
 """
 
 from __future__ import annotations
@@ -72,6 +72,8 @@ _STAGE_RE = re.compile(r"^\.stage-(\d+)-")
 _TRASH = ".trash-"
 # optimize's Z-order: each cluster column is bucketed into 2^4 quantile ranks.
 _ZORDER_BITS = 4
+# How often merge re-derives itself after losing a commit race.
+_CONFLICT_RETRIES = 2
 
 
 def _violation_message(name: str, predicate: str) -> str:
@@ -82,8 +84,8 @@ class ConcurrentWriteError(RuntimeError):
     """A concurrent writer committed between this transaction's read
     snapshot and its commit attempt (Delta's ConcurrentAppendException
     analog). The caller may re-derive its write from the new current
-    version and retry — `merge(conflict_retries=...)` does so
-    automatically."""
+    version and retry — `merge` does so automatically, up to
+    `_CONFLICT_RETRIES` times."""
 
 
 def _vname(version: int) -> str:
@@ -327,17 +329,22 @@ class ParquetTable:
         keys: Sequence[str],
         freshness_col: str | None = None,
         dedup_order: Sequence[Column | str] | None = None,
-        set_on_write: dict[str, Column] | None = None,
         evolve_schema: bool = False,
-        conflict_retries: int = 2,
     ) -> None:
-        """K2/K3: keyed upsert (optionally freshness-guarded) with the
-        mandatory pre-merge source dedup (SURVEY.md §7.5 risk 4).
+        """K2/K3: keyed upsert (optionally freshness-guarded) of a
+        key-unique source (SURVEY.md §7.5 risk 4).
+
+        The source must hold at most one row per key, NULL keys counting
+        as equal, as Delta's MERGE requires. With `dedup_order` the batch
+        is deduped to its first row per key under that order (the
+        reference's A2 pre-merge dedup); without it, a batch that
+        repeats a key raises ValueError before anything is staged, so
+        nothing is committed.
 
         Optimistic concurrency: the commit refuses if another writer
         advanced the table past the merge's read snapshot
         (ConcurrentWriteError); a keyed merge is re-derivable, so up to
-        `conflict_retries` retries re-derive it, schema included, from
+        `_CONFLICT_RETRIES` retries re-derive it, schema included, from
         the new snapshot — Delta's conflict-then-retry.
 
         `evolve_schema=True` is Delta's `mergeSchema`: source columns
@@ -354,27 +361,23 @@ class ParquetTable:
         an incremental sync costs O(window), not O(table) (SCALE.md
         "Merge / upsert").
 
-        The batch is deduped once, by `dedup_order`, before the merge:
-        the operators in operators/merge.py take a key-unique source, as
-        Delta's MERGE does. Append-only: when the (pruned) target slice
-        is empty — as a daily sync's new date partition is — every
-        source key is an insert, so the commit is the deduped batch with
-        `set_on_write` applied and no join. The rows equal
-        merge_dataframes'.
+        Append-only: when the (pruned) target slice is empty — as a
+        daily sync's new date partition is — every source key is an
+        insert, so the commit is the key-unique batch itself, with no
+        join. The rows equal merge_dataframes'.
 
-        An empty batch commits nothing and evolves no schema; on a
-        pruned table that guard is the affected-partition collect. The
+        An empty batch commits nothing and evolves no schema. The
         commit runs its plan once, but `source` is read more than once
-        (the guard and the write), so a nondeterministic source should be
-        persisted by the caller, as the sync path does.
+        (the guard and the write), so a nondeterministic source should
+        be persisted by the caller, as the sync path does.
         """
-        for attempt in range(conflict_retries + 1):
+        for attempt in range(_CONFLICT_RETRIES + 1):
             try:
                 return self._merge_impl(
-                    source, keys, freshness_col, dedup_order, set_on_write, evolve_schema
+                    source, keys, freshness_col, dedup_order, evolve_schema
                 )
             except ConcurrentWriteError:
-                if attempt == conflict_retries:
+                if attempt == _CONFLICT_RETRIES:
                     raise
 
     def _merge_impl(
@@ -383,13 +386,16 @@ class ParquetTable:
         keys: Sequence[str],
         freshness_col: str | None,
         dedup_order: Sequence[Column | str] | None,
-        set_on_write: dict[str, Column] | None,
         evolve_schema: bool,
     ) -> None:
         """One merge attempt.
 
-        P6 non-empty guard, at the STORE boundary: an empty source must
-        not burn a version (found by the stateful model test — an hourly
+        One guard query over the batch, before anything is staged, takes
+        the most rows any key has, per affected partition value (or over
+        the whole batch when no key column prunes the table). It is the
+        key-unique check, the list of partitions to re-merge, and the P6
+        non-empty guard at the STORE boundary: an empty source must not
+        burn a version (found by the stateful model test — an hourly
         sync poll with no new data was committing 24 identical version
         dirs a day until vacuum), nor evolve the schema."""
         # Read snapshot for the optimistic-concurrency check: every scan
@@ -409,16 +415,31 @@ class ParquetTable:
             if len(self.partition_by) == 1 and self.partition_by[0] in keys
             else None
         )
-        if pcol is None:
-            if source.isEmpty():
-                return
-        else:
-            # Affected partition values: one row per distinct source
-            # value — bounded by the batch's window, safe to collect. An
-            # empty list is the empty-batch guard: no separate job.
-            affected = [r[0] for r in source.select(pcol).distinct().collect()]
-            if not affected:
-                return
+        # groupBy groups NULL keys, as _null_safe_key_cond matches them;
+        # the dedup below leaves one row per key, so it needs no count.
+        per_key = (
+            source.withColumn("__rows", F.lit(1))
+            if dedup_order is not None
+            else source.groupBy(*keys).agg(F.count(F.lit(1)).alias("__rows"))
+        )
+        # One row per affected partition value (bounded by the batch's
+        # window), or one global row, which is NULL on an empty batch.
+        guard = [
+            r
+            for r in per_key.groupBy(*([pcol] if pcol else []))
+            .agg(F.max("__rows").alias("__rows"))
+            .collect()
+            if r["__rows"] is not None
+        ]
+        if not guard:
+            return
+        if max(r["__rows"] for r in guard) > 1:
+            raise ValueError(
+                f"merge source repeats a key of {tuple(keys)}: "
+                "pass dedup_order, or dedup the batch"
+            )
+        if pcol is not None:
+            affected = [r[pcol] for r in guard]
             # Null-safe prune: isin() never matches NULL.
             prune = F.col(pcol).isin([v for v in affected if v is not None])
             if any(v is None for v in affected):
@@ -431,9 +452,9 @@ class ParquetTable:
             # exactly what merge_dataframes computes, minus its join
             # against an empty slice. Partition pruning leaves the
             # isEmpty() above no files to scan.
-            merged = source.withColumns(dict(set_on_write or {}))
+            merged = source
         else:
-            merged = merge_dataframes(target, source, keys, freshness_col, set_on_write)
+            merged = merge_dataframes(target, source, keys, freshness_col)
         self._commit(merged, expected_version=base, carry_untouched=pcol, schema=schema)
 
     def optimize(
@@ -495,17 +516,13 @@ class ParquetTable:
         for c in cluster_by:
             dtype = dict(df.dtypes)[c]
             if dtype == "date":
-                num = F.unix_date(F.col(c)).cast("double")
-                num_df = df.select(F.unix_date(F.col(c)).cast("double").alias(c))
+                num = F.unix_date(F.col(c))
             elif dtype in ("timestamp", "timestamp_ntz"):
-                num = F.unix_micros(F.col(c).cast("timestamp")).cast("double")
-                num_df = df.select(
-                    F.unix_micros(F.col(c).cast("timestamp")).cast("double").alias(c)
-                )
+                num = F.unix_micros(F.col(c).cast("timestamp"))
             else:
-                num = F.col(c).cast("double")
-                num_df = df.select(F.col(c).cast("double").alias(c))
-            bounds = num_df.approxQuantile(c, probs, 0.001)
+                num = F.col(c)
+            num = num.cast("double")
+            bounds = df.select(num.alias(c)).approxQuantile(c, probs, 0.001)
             rank = F.lit(0)
             for b in bounds:
                 rank = rank + F.when(num > F.lit(b), 1).otherwise(0)

@@ -315,7 +315,9 @@ def foreach_batch_merge(
     K3 guard — the streaming form of the reference's sync loop. Pass
     `dedup_order` when a batch can carry several ops per key (a CDC
     feed): the pre-merge dedup keeps the batch's winning op, and the
-    freshness guard then arbitrates across batches."""
+    freshness guard then arbitrates across batches. Without it, an epoch
+    whose batch repeats a key fails (the merge refuses it with
+    ValueError) and commits nothing."""
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
         # merge() skips an empty batch itself; a check here would cost

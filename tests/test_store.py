@@ -235,25 +235,6 @@ def test_partitioned_merge_null_partition_falls_back(spark, tmp_path):
     assert t.read().count() == 2
 
 
-def test_merge_set_on_write_audit_column(spark, table):
-    """Audit columns set inside the merge (the engine's replacement for
-    the reference's updated_at triggers, SURVEY §1.5)."""
-    t0 = spark.createDataFrame(
-        _rows(("A", "2024-01-01", 1.0, "2024-01-01T00:00:00"),
-              ("B", "2024-01-01", 2.0, "2024-01-01T00:00:00")), SCHEMA)
-    table.overwrite(t0)
-    src = spark.createDataFrame(
-        _rows(("B", "2024-01-01", 20.0, "2024-01-05T00:00:00")), SCHEMA)
-    audit_ts = dt.datetime(2024, 2, 1)
-    table.merge(
-        src, keys=("k", "d"),
-        set_on_write={"extracted_at": F.lit(audit_ts).cast("timestamp")},
-    )
-    got = {r.k: r.extracted_at for r in table.read().collect()}
-    assert got["B"] == audit_ts            # written row stamped
-    assert got["A"] == dt.datetime(2024, 1, 1)  # untouched row keeps its value
-
-
 def test_delete_keeps_null_predicate_rows(spark, table):
     """SQL/Delta DELETE removes only predicate-TRUE rows; a NULL
     predicate (v IS NULL here) must keep the row (ADVICE r1)."""
@@ -587,7 +568,7 @@ def test_concurrent_merge_retries_and_preserves_both_writes(spark, tmp_path):
     assert got == ["A", "B"]
 
 
-def test_conflict_without_retries_raises(spark, tmp_path):
+def test_conflict_without_retries_raises(spark, tmp_path, monkeypatch):
     from pse_stocks_etl_spark.store import parquet_table as ptmod
     from pse_stocks_etl_spark.store.parquet_table import ConcurrentWriteError
 
@@ -607,10 +588,11 @@ def test_conflict_without_retries_raises(spark, tmp_path):
             t1.merge(a, keys=["k", "d"])
         return orig_publish(self, stage, version)
 
+    monkeypatch.setattr(ptmod, "_CONFLICT_RETRIES", 0)
     ptmod.ParquetTable._publish = racing_publish
     try:
         with pytest.raises(ConcurrentWriteError):
-            t2.merge(b, keys=["k", "d"], conflict_retries=0)
+            t2.merge(b, keys=["k", "d"])
     finally:
         ptmod.ParquetTable._publish = orig_publish
 
@@ -893,8 +875,8 @@ def test_append_only_merge_equals_full_merge(spark, tmp_path, monkeypatch):
     """A batch that lands only in new partitions, or in an empty
     unpartitioned table, skips the merge join (merge_dataframes is
     never called) yet commits the same rows merge_dataframes computes
-    over the full table from the source deduped by dedup_order:
-    set_on_write applied, untouched partitions carried as hardlinks."""
+    over the full table from the source deduped by dedup_order, with
+    untouched partitions carried as hardlinks."""
     import os
 
     from pse_stocks_etl_spark.operators.dedup import topk_per_group
@@ -915,7 +897,7 @@ def test_append_only_merge_equals_full_merge(spark, tmp_path, monkeypatch):
               ("C", "2024-01-04", 4.0, "2024-01-04T00:00:00")), PART_SCHEMA)
     dedup_order = [F.col("v").desc(), F.col("extracted_at").desc()]
     deduped = topk_per_group(src, ("k", "d"), dedup_order, k=1)
-    kw = dict(freshness_col="extracted_at", set_on_write={"v": F.col("v") * 10})
+    kw = dict(freshness_col="extracted_at")
     expected = sorted(
         map(tuple, merge_dataframes(t.read(), deduped, ("k", "d"), **kw).collect())
     )
@@ -959,6 +941,63 @@ def _sync_jobs(spark, tmp_path, lookback_days):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return sc.statusTracker().getJobIdsForGroup(group), r, len(ds.connector.symbols)
+
+
+NULLABLE_KEYS = T.StructType(
+    [
+        T.StructField("k", T.LongType(), True),
+        T.StructField("d", T.DateType(), True),
+        T.StructField("v", T.LongType(), True),
+        T.StructField("fresh", T.LongType(), True),
+    ]
+)
+D0 = dt.date(2024, 1, 1)
+
+
+@pytest.mark.parametrize(
+    "target, batch",
+    [
+        # One fresh and one stale row for the key of (1, 0, 5): the full
+        # outer join matches both against the target row.
+        ([(1, D0, 0, 5)], [(1, D0, 1, 9), (1, D0, 2, 0)]),
+        # A new partition: the append-only path, which has no join.
+        ([(1, D0, 0, 5)], [(2, dt.date(2024, 1, 2), 1, 9), (2, dt.date(2024, 1, 2), 2, 0)]),
+        # NULL keys count as equal, as the null-safe merge join matches them.
+        ([(1, D0, 0, 5)], [(None, None, 1, 9), (None, None, 2, 9)]),
+    ],
+    ids=["freshness_guarded", "append_only", "null_keys"],
+)
+@pytest.mark.parametrize("partition_by", [(), ("d",)], ids=["unpartitioned", "partitioned"])
+def test_merge_refuses_a_source_that_repeats_a_key(spark, tmp_path, target, batch, partition_by):
+    """A merge without dedup_order refuses a batch with several rows for
+    one key, as Delta's MERGE does, before anything is staged: no
+    version, staging dir or row changes."""
+    t = ParquetTable(spark, str(tmp_path / "dup"), NULLABLE_KEYS, partition_by=partition_by)
+    t.overwrite(spark.createDataFrame(target, NULLABLE_KEYS))
+
+    def rows():
+        return set(map(tuple, t.read().select(*NULLABLE_KEYS.fieldNames()).collect()))
+
+    history, before = t.history(), rows()
+    with pytest.raises(ValueError, match="repeats a key"):
+        t.merge(
+            spark.createDataFrame(batch, NULLABLE_KEYS),
+            keys=("k", "d"),
+            freshness_col="fresh",
+        )
+    assert t.history() == history
+    assert rows() == before
+    assert _uncommitted(t.path) == []
+    # With dedup_order the same batch merges: its first row, the
+    # freshest, wins.
+    t.merge(
+        spark.createDataFrame(batch, NULLABLE_KEYS),
+        keys=("k", "d"),
+        freshness_col="fresh",
+        dedup_order=[F.col("fresh").desc(), F.col("v")],
+    )
+    want = {r[:2]: r for r in target + [batch[0]]}
+    assert rows() == set(want.values())
 
 
 def test_daily_sync_job_count(spark, tmp_path):

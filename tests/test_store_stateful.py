@@ -7,10 +7,11 @@ model — the current read through both handles, and time-travel to every
 retained version. Every example begins with a freshness-guarded stale
 replay of one row, and every merge rule rewrites one existing key, so a
 merge that appends instead of upserting, or a guard that ignores
-freshness, fails every run. Single-op
-properties live in test_properties.py; this machine checks that the
-OPERATIONS COMPOSE (restore-after-merge, merge-after-delete, ...),
-which is where versioned stores actually break."""
+freshness, fails every run, and so does a merge that accepts a batch
+which repeats a key (every example tries one; merge rules draw more).
+Single-op properties live in test_properties.py; this machine checks
+that the OPERATIONS COMPOSE (restore-after-merge, merge-after-delete,
+...), which is where versioned stores actually break."""
 
 from __future__ import annotations
 
@@ -47,7 +48,7 @@ rows_strategy = st.lists(
     ),
     min_size=0,
     max_size=4,
-    unique_by=lambda r: r[0],  # unique keys per batch: merge input contract
+    unique_by=lambda r: r[0],  # unique keys per batch; merge adds its own repeats
 )
 noted_rows_strategy = st.lists(
     st.tuples(
@@ -61,6 +62,8 @@ noted_rows_strategy = st.lists(
     unique_by=lambda r: r[0],
 )
 handle_strategy = st.integers(min_value=0, max_value=1)
+# Whether a merge batch repeats one of its keys, which the store refuses.
+repeat_strategy = st.booleans()
 # Picks the existing key a merge rewrites (modulo the model's size).
 pick_strategy = st.integers(min_value=0, max_value=10_000)
 
@@ -104,8 +107,10 @@ class StoreMachine(RuleBasedStateMachine):
         # Every example starts with a stale replay of one row: a merge
         # that appends instead of upserting, or a guard that ignores
         # freshness, fails this step whatever rules follow (the rules
-        # themselves are enabled at random per example).
-        self.merge_fresh(0, [], pick)
+        # themselves are enabled at random per example). Then the same
+        # replay with its key repeated, which the store must refuse.
+        self.merge_fresh(0, [], pick, repeat=False)
+        self.merge_fresh(0, [], pick, repeat=True)
 
     def _commit_model(self):
         self.versions.append((self.columns, dict(self.model)))
@@ -136,20 +141,31 @@ class StoreMachine(RuleBasedStateMachine):
         self.model = {r[0]: self._row(r) for r in rows}
         self._commit_model()
 
-    @rule(h=handle_strategy, rows=rows_strategy, pick=pick_strategy)
-    def merge(self, h, rows, pick):
+    def _merged(self, h, rows, repeat, **kw):
+        """Merge `rows` through handle `h` and say whether it committed
+        rows. With `repeat`, the batch also carries a second row for its
+        first key: the store must refuse it and leave the table, and so
+        the model, unchanged."""
+        if repeat and rows:
+            k, val, fresh = rows[0]
+            with pytest.raises(ValueError, match="repeats a key"):
+                self.handles[h].merge(self._df(rows + [(k, val + 1, fresh)]), keys=["k"], **kw)
+            return False
+        self.handles[h].merge(self._df(rows), keys=["k"], **kw)
+        return bool(rows)  # empty-source merge is a no-op commit-wise
+
+    @rule(h=handle_strategy, rows=rows_strategy, pick=pick_strategy, repeat=repeat_strategy)
+    def merge(self, h, rows, pick, repeat):
         rows = self._hit(rows, pick)
-        self.handles[h].merge(self._df(rows), keys=["k"])
-        if rows:  # empty-source merge is a no-op commit-wise
+        if self._merged(h, rows, repeat):
             for r in rows:
                 self.model[r[0]] = self._row(r)
             self._commit_model()
 
-    @rule(h=handle_strategy, rows=rows_strategy, pick=pick_strategy)
-    def merge_fresh(self, h, rows, pick):
+    @rule(h=handle_strategy, rows=rows_strategy, pick=pick_strategy, repeat=repeat_strategy)
+    def merge_fresh(self, h, rows, pick, repeat):
         rows = self._hit(rows, pick, fresh_shift=-1)
-        self.handles[h].merge(self._df(rows), keys=["k"], freshness_col="fresh")
-        if rows:
+        if self._merged(h, rows, repeat, freshness_col="fresh"):
             for r in rows:
                 if r[0] not in self.model or r[2] >= self.model[r[0]][2]:
                     self.model[r[0]] = self._row(r)
